@@ -1432,6 +1432,18 @@ _R5_CODE_BOUNDARY_PATTERNS = (
 )
 
 
+def _assert_ascii_fixture(docs: DataFrame) -> None:
+    """The precondition of the frozen oracle above: every fixture
+    document is ASCII (``str.isascii()``). Checked on the documents the
+    query reads, so a non-ASCII fixture fails here, by doc_id, instead
+    of as a spurious oracle mismatch."""
+    bad = [r["doc_id"] for r in docs.select("doc_id", "text").collect()
+           if not (r["text"] or "").isascii()]
+    if bad:
+        raise ValueError("the frozen code-tokenizer oracle needs ASCII "
+                         f"fixture documents; not ASCII: doc_id {bad[:10]}")
+
+
 def _frozen_code_tokens_sql_duckdb(text_expr: str) -> str:
     from inverted_index_and_search_spark.tokenizer import DUCKDB_STRIP_REGEX
 
@@ -1487,6 +1499,7 @@ def _q_term_stats_analyzed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inverted_index_and_search_spark import analysis as an
 
     docs = _docs(spark, sf_dir)
+    _assert_ascii_fixture(docs)
 
     def stats(postings, tag):
         return postings.select(

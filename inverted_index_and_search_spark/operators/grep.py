@@ -45,9 +45,10 @@ flat path, equality-tested):
   per-(gram, shard) doc-id lists on the term-segment codec wire, hot
   grams sharded so a stop-gram's merged list never exists;
 - **incremental LSM maintenance** (:class:`TrigramIndexWriter` /
-  :func:`ingest_trigram_stream`): append-only delta batches, batch-
-  ordered tombstone deletes, live view, compaction to either layout —
-  the term index's ingest protocol applied to grams;
+  :func:`ingest_trigram_stream`): the term index's delta log
+  (streaming/lsm.py) applied to grams — append-only delta batches,
+  upsert on re-delivery, batch-ordered tombstone deletes, live view,
+  compaction to either layout;
 - **warm serving** (:class:`GrepServer`): per-gram decoded-id and
   per-doc verified-content LRUs, rarest-gram selection via the stats
   table BEFORE any posting fetch — repeat needles answer in
@@ -70,6 +71,7 @@ from inverted_index_and_search_spark.operators.index_build import (
     term_bucket_col,
 )
 from inverted_index_and_search_spark.kernels.xxhash import term_bucket
+from inverted_index_and_search_spark.streaming.lsm import DeltaLog
 
 GRAM_N = 3
 #: prefilter width: more grams = fewer candidates but more index rows
@@ -120,13 +122,6 @@ class TrigramIndex:
     #: (kernels/codec — the same wire as term segments); queries decode
     #: distributed, results identical to the flat layout (tested)
     compressed: bool = False
-    #: rows are unique per (gram, doc): true for every built/compacted/
-    #: persisted layout (the build emits distinct grams per doc,
-    #: compaction dedups, compressed shards partition docs). Only the
-    #: UN-compacted LSM live view can hold a resurrected doc's
-    #: duplicate rows — it sets False and candidate counting then
-    #: pays the distinct aggregate; everyone else skips it (r6).
-    unique_rows: bool = True
 
 
 def build_trigram_index(docs: DataFrame, *, content_col: str = "content",
@@ -205,12 +200,12 @@ def segments_from_flat(flat: DataFrame, *,
                                   F.pmod(F.xxhash64("doc_id"),
                                          F.lit(shard_factor)))
                            .otherwise(F.lit(0)).cast("int")))
-    # collect_SET: the build-path flat relation is already distinct per
-    # (gram, doc), but LSM compaction may hold a re-ingested doc's rows
-    # from several batches — the encoder needs strictly-increasing ids
+    # flat rows are unique per (gram, doc) — the build emits distinct
+    # grams per doc and the LSM live view keeps one version per doc —
+    # so the sorted list is strictly increasing, as the encoder needs
     grouped = sharded.groupBy("gram", "gram_bucket", "shard").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("doc_ids"),
-        F.countDistinct("doc_id").cast("long").alias("p_df"))
+        F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
+        F.count("*").cast("long").alias("p_df"))
 
     import numpy as np
 
@@ -336,14 +331,13 @@ def _candidates(tidx: TrigramIndex, grams: list[str]) -> DataFrame:
         F.col("gram_bucket").isin(buckets) & F.col("gram").isin(grams))
     if tidx.compressed:
         hits = decode_gram_postings(hits)
-    # unique layouts: plain count == distinct count, one aggregation
-    # layer (and its extra exchange) less per query; the LSM live view
-    # (unique_rows=False) keeps the distinct so resurrect duplicates
-    # stay harmless
-    n = (F.count("*") if tidx.unique_rows
-         else F.countDistinct("gram")).alias("n_grams")
+    # count(*) == count(distinct gram): rows are unique per (gram, doc)
+    # on every layout — the build emits distinct grams per doc,
+    # compressed shards partition a gram's docs, and the LSM live view
+    # keeps one version per doc (streaming/lsm.py) — so no distinct
+    # aggregation layer (and its extra exchange) is needed
     return (hits.groupBy("doc_id")
-            .agg(n)
+            .agg(F.count("*").alias("n_grams"))
             .where(F.col("n_grams") == len(grams))
             .select("doc_id"))
 
@@ -557,25 +551,24 @@ def regex_search(tidx: TrigramIndex | None, docs: DataFrame, pattern: str, *,
 
 # ------------------------------------------------------- incremental (LSM)
 
-class TrigramIndexWriter:
-    """LSM-style incremental maintenance for the trigram index — the
-    grep analogue of streaming.ingest.StreamingIndexWriter, same delta
-    protocol (append-only batch parquet, tombstone deletes ordered by
-    batch id, live view at read time, compaction on demand):
+class TrigramIndexWriter(DeltaLog):
+    """LSM-style incremental maintenance for the trigram index: the term
+    writer's delta log (streaming/lsm.py) applied to grams.
 
-    - ``process_batch``: the batch's flat (gram, gram_bucket, doc_id)
-      rows append under ``delta/batch_id=N`` — no read-modify-write;
-    - ``delete_docs``: (doc_id) tombstones under ``delta_del/batch_id=B``
-      kill STRICTLY earlier ingests of that doc; later re-ingests
-      resurrect (update = delete then re-ingest, exactly the term
-      writer's discipline);
-    - ``live_index``: union of live delta rows — it marks the index
-      ``unique_rows=False`` so candidate counting uses countDistinct
-      and a resurrect's duplicate rows stay harmless (built/compacted
-      layouts skip that distinct);
-    - ``compact``: rewrites the canonical layout (flat or compressed)
-      from the live rows; physically purges tombstoned docs.
+    - ``process_batch`` appends the batch's flat (gram, gram_bucket,
+      doc_id) rows under ``delta/batch_id=N``, then its doc ids (the
+      log's per-batch doc relation) under ``delta_docs/batch_id=N``;
+    - ingest is an upsert (Lucene ``updateDocument``): a re-delivered
+      doc's earlier rows are superseded, so live rows are unique per
+      (gram, doc) by construction — in the live view, in any index
+      written from it, and after compaction;
+    - ``delete_docs`` tombstones kill strictly earlier versions;
+    - ``compact`` rewrites the flat or compressed layout from the live
+      rows, physically purging superseded and deleted versions.
     """
+
+    rows_dir = "delta"
+    docs_dir = "delta_docs"
 
     def __init__(self, out_dir: str, *, content_col: str = "content",
                  id_col: str = "doc_id", n_buckets: int = DEFAULT_BUCKETS,
@@ -586,75 +579,29 @@ class TrigramIndexWriter:
         self.n_buckets = n_buckets
         self.case_insensitive = case_insensitive
 
-    # ------------------------------------------------------------ write
     def process_batch(self, docs_batch: DataFrame, batch_id: int) -> None:
         flat = build_trigram_index(
             docs_batch, content_col=self.content_col, id_col=self.id_col,
             n_buckets=self.n_buckets,
             case_insensitive=self.case_insensitive).grams
-        (flat.write.mode("overwrite").partitionBy("gram_bucket")
-         .parquet(f"{self.out_dir}/delta/batch_id={batch_id}"))
-
-    def delete_docs(self, spark, doc_ids, batch_id: int | None = None) -> int:
-        if batch_id is None:
-            batch_id = self._next_batch_id(spark)
-        if isinstance(doc_ids, DataFrame):
-            df = doc_ids.select(F.col("doc_id").cast("long"))
-        else:
-            df = spark.createDataFrame([(int(d),) for d in doc_ids],
-                                       "doc_id long")
-        (df.coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.out_dir}/delta_del/batch_id={batch_id}"))
-        return int(batch_id)
-
-    def _next_batch_id(self, spark) -> int:
-        ids = [-1]
-        for sub in ("delta", "delta_del"):
-            try:
-                ids += [int(r["batch_id"]) for r in
-                        spark.read.parquet(f"{self.out_dir}/{sub}")
-                        .select("batch_id").distinct().collect()]
-            except Exception:  # noqa: BLE001 — dir not written yet
-                pass
-        return max(ids) + 1
-
-    # ------------------------------------------------------------- read
-    def _live_flat(self, spark) -> DataFrame:
-        flat = spark.read.parquet(f"{self.out_dir}/delta")
-        try:
-            dels = spark.read.parquet(f"{self.out_dir}/delta_del")
-        except Exception:  # noqa: BLE001 — no deletes ever issued
-            return flat.drop("batch_id")
-        dead = dels.groupBy("doc_id").agg(F.max("batch_id").alias("_del_b"))
-        return (flat.join(dead, "doc_id", "left")
-                .where(F.col("_del_b").isNull()
-                       | (F.col("batch_id") >= F.col("_del_b")))
-                .drop("_del_b", "batch_id"))
+        self._append(flat, self.rows_dir, batch_id, "gram_bucket")
+        self._append(docs_batch.select(
+            F.col(self.id_col).cast("long").alias("doc_id")),
+            self.docs_dir, batch_id)
 
     def live_index(self, spark) -> TrigramIndex:
-        flat = self._live_flat(spark).select("gram", "gram_bucket", "doc_id")
-        stats = flat.groupBy("gram").agg(
-            F.countDistinct("doc_id").cast("long").alias("df"))
+        flat, = self._live(spark, self.rows_dir)
+        flat = flat.select("gram", "gram_bucket", "doc_id")
+        stats = flat.groupBy("gram").agg(F.count("*").cast("long").alias("df"))
         return TrigramIndex(grams=flat, stats=stats,
                             n_buckets=self.n_buckets,
-                            case_insensitive=self.case_insensitive,
-                            unique_rows=False)
+                            case_insensitive=self.case_insensitive)
 
-    # ---------------------------------------------------------- compact
     def compact(self, spark, dest: str, *, compressed: bool = False) -> None:
+        tidx = self.live_index(spark)
         if compressed:
-            tidx = segments_from_flat(
-                self._live_flat(spark)
-                .select("gram", "gram_bucket", "doc_id").distinct(),
-                n_buckets=self.n_buckets,
-                case_insensitive=self.case_insensitive)
-        else:
-            tidx = self.live_index(spark)
-            # physical purge dedups resurrect duplicates on disk
-            tidx = TrigramIndex(grams=tidx.grams.distinct(),
-                                stats=tidx.stats,
-                                n_buckets=tidx.n_buckets,
-                                case_insensitive=tidx.case_insensitive)
+            tidx = segments_from_flat(tidx.grams, n_buckets=self.n_buckets,
+                                      case_insensitive=self.case_insensitive)
         write_trigram_index(tidx, dest)
 
 
@@ -669,18 +616,8 @@ def ingest_trigram_stream(spark, input_dir: str, out_dir: str, *,
     writer = TrigramIndexWriter(out_dir, content_col=content_col,
                                 id_col=id_col,
                                 case_insensitive=case_insensitive)
-    schema = spark.read.parquet(input_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(input_dir))
-    q = (stream.writeStream
-         .foreachBatch(writer.process_batch)
-         .option("checkpointLocation",
-                 checkpoint or f"{out_dir}/_checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return writer
+    return writer.drain(spark, input_dir, checkpoint=checkpoint,
+                        max_files_per_trigger=max_files_per_trigger)
 
 
 # --------------------------------------------------------- warm server

@@ -101,10 +101,11 @@ def boolean_and(index: Index, terms: list[str]) -> DataFrame:
         "term", F.col("p.doc_id").alias("doc_id")
     )
     # count(*) == count(distinct term): the exploded relation is unique
-    # per (term, doc) by layout construction (one posting struct per doc;
-    # sharded layouts split a term's postings by doc hash, so a doc
-    # appears in exactly one shard row). Dropping the distinct removes
-    # the extra aggregation layer the distinct-agg rewrite inserts.
+    # per (term, doc) by construction on every layout (one posting
+    # struct per doc; sharded layouts split a term's postings by doc
+    # hash, so a doc appears in exactly one shard row; the LSM live view
+    # keeps one version per doc, streaming/lsm.py). Dropping the
+    # distinct removes the extra aggregation layer it would insert.
     return (
         exploded.groupBy("doc_id")
         .agg(F.count("*").alias("n_matched"))

@@ -798,6 +798,9 @@ class QueryServer:
         #: unbounded warm behavior).
         if max_term_df_warm == "auto":
             max_term_df_warm = 10 * int(max_terms)
+        elif isinstance(max_term_df_warm, str):
+            raise ValueError("max_term_df_warm must be an int, None or "
+                             f"'auto', got {max_term_df_warm!r}")
         self.max_term_df_warm = max_term_df_warm
         self._cache: dict[str, bm25.TermPostings | None] = {}
         #: term -> df learned from the narrow stats probe (hot routing)

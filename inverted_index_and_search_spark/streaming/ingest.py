@@ -2,34 +2,31 @@
 
 The reference rebuilds its index from scratch per run; at 10^12 files
 an index must absorb new documents incrementally. Design (the standard
-LSM shape used by search engines):
+LSM shape used by search engines; the delta-log protocol lives in
+``streaming/lsm.py``):
 
-- each micro-batch of new documents is tokenized + tf-counted (the same
-  Arrow in-mapper-combining kernel as the batch build) and written as a
-  **delta segment**: a small parquet of (term, doc_id, tf) partitioned
-  by term_bucket, under ``<dir>/delta/batch_id=N`` — append-only, no
-  read-modify-write on the hot path;
-- doc stats (dl, sha256) append the same way;
-- :func:`compact` folds all deltas into the canonical postings layout
-  (identical schema to ``index_build.write_index``) — per-bucket merge,
-  exactly the engine's normal aggregation, run at whatever cadence
-  amortizes write cost;
-- queries before compaction see the merged view via :func:`live_index`
-  (union of canonical tf + deltas re-aggregated) — correctness never
-  waits for compaction;
-- **deletes are tombstones** (:meth:`StreamingIndexWriter.delete_docs`):
-  an append-only (doc_id) delta whose batch id orders it against
-  ingests — it kills strictly-earlier ingests of that doc, later
-  (or same-batch) re-ingests resurrect, the live view applies
-  tombstones at read time (AQE-broadcast left join against the tiny
-  dead set) and compaction physically purges them, exactly Lucene's
-  liveDocs-then-merge lifecycle.
+- each micro-batch is tokenized + tf-counted (the batch build's Arrow
+  in-mapper-combining kernel) and appended as a **delta segment** of
+  (term, doc_id, tf) rows partitioned by term_bucket under
+  ``delta_tf/batch_id=N``, its doc stats (dl, sha256) under
+  ``delta_ds/batch_id=N`` — no read-modify-write on the hot path;
+- **ingest is an upsert** (Lucene ``updateDocument``): a doc's live
+  version is its highest ingest batch, so re-delivering a doc_id,
+  changed or not, supersedes its earlier versions. Live rows are unique
+  per (term, doc) and live doc stats hold one row per doc, by
+  construction;
+- **deletes are tombstones** (``delete_docs``): append-only (doc_id)
+  deltas ordered against ingests by batch id — a tombstone kills the
+  strictly-earlier versions, a later ingest brings the doc back;
+- ``live_index`` answers queries before compaction (live rows
+  re-aggregated; the version filter is an AQE-broadcast join against
+  the tiny set of superseded or tombstoned docs); ``compact`` /
+  ``compact_segments`` fold the live rows into the canonical layouts and
+  physically purge dead versions — Lucene's liveDocs-then-merge.
 
-``ingest_stream`` wires this into Structured Streaming via
-``foreachBatch`` with ``availableNow``; the batch-vs-streaming
-equivalence (stream the corpus in chunks -> compact -> byte-identical
-postings rows to the one-shot batch build) is asserted in
-tests/test_streaming.py.
+``ingest_stream`` drains a directory via ``foreachBatch`` with
+``availableNow``; stream -> compact equals the one-shot batch build row
+for row (tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -38,10 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inverted_index_and_search_spark.operators import index_build as ib
+from inverted_index_and_search_spark.streaming.lsm import DeltaLog
 
 
-class StreamingIndexWriter:
+class StreamingIndexWriter(DeltaLog):
     """Accumulates delta segments per micro-batch; compacts on demand."""
+
+    rows_dir = "delta_tf"
+    docs_dir = "delta_ds"
 
     def __init__(self, out_dir: str, *, content_col: str = "content",
                  id_col: str = "doc_id", n_buckets: int = ib.DEFAULT_BUCKETS,
@@ -81,86 +82,18 @@ class StreamingIndexWriter:
                                       analyzer=self.analyzer)
         tf = tf.withColumn("term_bucket",
                            ib.term_bucket_col(F.col("term"), self.n_buckets))
-        (tf.write.mode("overwrite")
-         .partitionBy("term_bucket")
-         .parquet(f"{self.out_dir}/delta_tf/batch_id={batch_id}"))
+        self._append(tf, self.rows_dir, batch_id, "term_bucket")
         ds = ib.doc_stats(docs_batch, tf, content_col=self.content_col,
                           id_col=self.id_col)
-        (ds.write.mode("overwrite")
-         .parquet(f"{self.out_dir}/delta_ds/batch_id={batch_id}"))
-
-    # ---------------------------------------------------------- deletes
-    def delete_docs(self, spark: SparkSession, doc_ids,
-                    batch_id: int | None = None) -> int:
-        """Tombstone-delete documents (Lucene-style): appends a tiny
-        (doc_id) delta under ``delta_del/batch_id=B`` — append-only
-        like ingests, no read-modify-write anywhere. Semantics are
-        sequence-number based: a tombstone at batch B kills postings /
-        doc stats ingested in STRICTLY EARLIER batches; a later
-        re-ingest of the same doc_id resurrects it as a new version.
-        The live view applies tombstones at read time; compaction
-        physically purges them. ``doc_ids`` is a (doc_id) DataFrame or
-        an iterable of ints; ``batch_id`` defaults to one past the
-        highest batch seen (ingest or delete). Returns the batch id
-        used."""
-        if batch_id is None:
-            batch_id = self._next_batch_id(spark)
-        if isinstance(doc_ids, DataFrame):
-            df = doc_ids.select(F.col("doc_id").cast("long"))
-        else:
-            df = spark.createDataFrame([(int(d),) for d in doc_ids],
-                                       "doc_id long")
-        (df.coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.out_dir}/delta_del/batch_id={batch_id}"))
-        return int(batch_id)
-
-    def _next_batch_id(self, spark: SparkSession) -> int:
-        ids = [-1]
-        for sub in ("delta_tf", "delta_del"):
-            try:
-                ids += [int(r["batch_id"]) for r in
-                        spark.read.parquet(f"{self.out_dir}/{sub}")
-                        .select("batch_id").distinct().collect()]
-            except Exception:  # noqa: BLE001 — dir not written yet
-                pass
-        return max(ids) + 1
-
-    def _delta_deletes(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(f"{self.out_dir}/delta_del")
-        except Exception:  # noqa: BLE001 — no deletes ever issued
-            return None
-
-    def _apply_tombstones(self, df: DataFrame,
-                          dels: DataFrame | None) -> DataFrame:
-        """Drop rows of docs whose latest tombstone postdates their
-        ingest batch. The dead set (one row per ever-deleted doc) is
-        usually tiny — AQE turns the left join into a broadcast at
-        runtime, so the delta relations are not reshuffled on doc_id;
-        with no tombstones on disk this is a plain column drop."""
-        if dels is None:
-            return df.drop("batch_id")
-        dead = dels.groupBy("doc_id").agg(F.max("batch_id").alias("_del_b"))
-        return (df.join(dead, "doc_id", "left")
-                .where(F.col("_del_b").isNull()
-                       | (F.col("batch_id") >= F.col("_del_b")))
-                .drop("_del_b", "batch_id"))
+        self._append(ds, self.docs_dir, batch_id)
 
     # ------------------------------------------------------------- read
-    def _delta_tf(self, spark: SparkSession) -> DataFrame:
-        return self._apply_tombstones(
-            spark.read.parquet(f"{self.out_dir}/delta_tf"),
-            self._delta_deletes(spark))
-
-    def _delta_doc_stats(self, spark: SparkSession) -> DataFrame:
-        return self._apply_tombstones(
-            spark.read.parquet(f"{self.out_dir}/delta_ds"),
-            self._delta_deletes(spark))
-
     def live_index(self, spark: SparkSession) -> ib.Index:
         """Queryable view over everything ingested so far (pre-compaction):
-        postings re-aggregated across delta segments on the fly."""
-        tf = self._delta_tf(spark).drop("term_bucket")
+        the live version's postings re-aggregated across delta segments
+        on the fly."""
+        tf, ds = self._live(spark, self.rows_dir, self.docs_dir)
+        tf = tf.drop("term_bucket")
         if self.positional:
             from inverted_index_and_search_spark.operators.positional import (
                 positional_postings,
@@ -170,7 +103,7 @@ class StreamingIndexWriter:
             posts = ib.postings(tf, n_buckets=self.n_buckets)
         return ib.Index(
             postings=posts,
-            doc_stats=self._delta_doc_stats(spark),
+            doc_stats=ds,
             tf=tf,
             n_buckets=self.n_buckets,
             tokenizer=self.tokenizer,
@@ -181,7 +114,7 @@ class StreamingIndexWriter:
     def compact(self, spark: SparkSession, index_dir: str, *,
                 forward: bool = False) -> None:
         """Fold all delta segments into the canonical index layout
-        (identical to a one-shot batch build over the same docs).
+        (identical to a one-shot batch build over the live docs).
         ``forward=True`` also emits the doc-bucketed forward layout
         (r5) — the live tf relation is exactly what it derives from,
         so streamed indexes get the doc->terms access path too."""
@@ -191,21 +124,16 @@ class StreamingIndexWriter:
         """Fold all deltas into the COMPRESSED segment layout (the
         north-star delta+varint block-max format) — queryable warm via
         segments.QueryServer / `search --index-format segments`;
-        identical to a one-shot build_segment_index over the same docs
+        identical to a one-shot build_segment_index over the live docs
         (tested). Positional deltas keep their positions, so the
         compacted segments answer phrase/proximity queries."""
-        from pyspark.sql import functions as F
-
         from inverted_index_and_search_spark.operators import segments as sg
 
-        tf = self._delta_tf(spark).drop("term_bucket")
-        ds = self._delta_doc_stats(spark)
-        row = ds.agg(F.count("*").alias("n"),
-                     F.avg("dl").alias("avgdl")).collect()[0]
+        live = self.live_index(spark)
+        n_docs, avgdl = live.collection_stats()
         sidx = sg.build_segment_index(
-            tf, int(row["n"]), float(row["avgdl"] or 0.0),
-            n_buckets=self.n_buckets, tokenizer=self.tokenizer,
-            analyzer=self.analyzer)
+            live.tf, n_docs, avgdl, n_buckets=self.n_buckets,
+            tokenizer=self.tokenizer, analyzer=self.analyzer)
         sg.write_segment_index(sidx, seg_dir)
 
 
@@ -214,21 +142,11 @@ def ingest_stream(spark: SparkSession, input_dir: str, out_dir: str, *,
                   checkpoint: str | None = None,
                   max_files_per_trigger: int = 1,
                   positional: bool = False, tokenizer: str = "standard",
-                 analyzer=None):
+                  analyzer=None):
     """Stream a directory of document parquet files into delta segments
     (availableNow: drains what exists, then stops — cron-friendly)."""
     writer = StreamingIndexWriter(out_dir, content_col=content_col,
                                   id_col=id_col, positional=positional,
                                   tokenizer=tokenizer, analyzer=analyzer)
-    schema = spark.read.parquet(input_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(input_dir))
-    q = (stream.writeStream
-         .foreachBatch(writer.process_batch)
-         .option("checkpointLocation",
-                 checkpoint or f"{out_dir}/_checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return writer
+    return writer.drain(spark, input_dir, checkpoint=checkpoint,
+                        max_files_per_trigger=max_files_per_trigger)

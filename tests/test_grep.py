@@ -336,8 +336,9 @@ def test_compressed_roundtrip_and_cli(spark, docs_df, corpus_pdf,
 def test_trigram_lsm_ingest_delete_compact(spark, docs_df, corpus_pdf,
                                            tmp_path):
     """LSM lifecycle: chunked ingest -> live == batch; tombstone kills
-    earlier ingests; re-ingest resurrects; compaction (flat AND
-    compressed) answers identically after physical purge."""
+    earlier ingests; re-ingest brings the doc back; re-delivery without
+    a delete upserts; compaction (flat AND compressed) answers
+    identically after physical purge."""
     chunks = str(tmp_path / "tri_chunks")
     docs = docs_df.select("doc_id", "content")
     for i in range(3):
@@ -361,11 +362,25 @@ def test_trigram_lsm_ingest_delete_compact(spark, docs_df, corpus_pdf,
         writer.live_index(spark), docs_df, needle).collect())
     assert got == [d for d in want if d != victim]
 
-    # re-ingest resurrects (update = delete + re-ingest)
-    writer.process_batch(docs.where(F.col("doc_id") == victim),
-                         writer._next_batch_id(spark))
+    # re-ingest after the tombstone brings the doc back
+    writer.process_batch(docs.where(F.col("doc_id") == victim), 4)
     got = sorted(r["doc_id"] for r in grep.substring_search(
         writer.live_index(spark), docs_df, needle).collect())
+    assert got == want
+
+    # re-delivery WITHOUT a delete is an upsert: the earlier version's
+    # rows are superseded, so the live view stays unique per (gram, doc)
+    # and an index written from it answers the same
+    writer.process_batch(docs.where(F.col("doc_id") == want[-1]), 5)
+    assert writer.next_batch_id() == 6
+    live = writer.live_index(spark)
+    got = sorted(r["doc_id"] for r in grep.substring_search(
+        live, docs_df, needle).collect())
+    assert got == want
+    dest = str(tmp_path / "tri_live_written")
+    grep.write_trigram_index(live, dest)
+    got = sorted(r["doc_id"] for r in grep.substring_search(
+        grep.read_trigram_index(spark, dest), docs_df, needle).collect())
     assert got == want
 
     # compaction, both layouts
@@ -378,7 +393,7 @@ def test_trigram_lsm_ingest_delete_compact(spark, docs_df, corpus_pdf,
             back, docs_df, needle).collect())
         assert got == want
         if not compressed:
-            # physical purge: no duplicate rows from the resurrect
+            # one row per (gram, doc) after the re-ingest and re-delivery
             n = back.grams.groupBy("gram", "doc_id").count() \
                 .where(F.col("count") > 1).count()
             assert n == 0

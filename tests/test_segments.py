@@ -447,3 +447,6 @@ def test_query_server_residency_bound_default_on(seg_index):
     # explicit opt-out restores the unbounded warm path
     assert seg.QueryServer(
         seg_index, max_term_df_warm=None).max_term_df_warm is None
+    # any other string fails at construction, not inside the first query
+    with pytest.raises(ValueError, match="max_term_df_warm"):
+        seg.QueryServer(seg_index, max_term_df_warm="Auto")

@@ -8,6 +8,8 @@ import pytest
 
 from inverted_index_and_search_spark.operators import events as ev
 from inverted_index_and_search_spark.operators import index_build as ib
+from inverted_index_and_search_spark.operators import query as q
+from inverted_index_and_search_spark.operators import segments as sg
 from inverted_index_and_search_spark.streaming import ingest, stream_ops
 
 EVENTS = "/root/testdata/sf0.001/events.parquet"
@@ -178,7 +180,6 @@ def test_compact_segments_equals_batch_segment_build(spark, docs_df,
     over the same docs: identical decoded postings, identical warm
     query results (positional: phrase-capable)."""
     from inverted_index_and_search_spark.operators import positional as pos
-    from inverted_index_and_search_spark.operators import segments as sg
 
     chunks_dir = str(tmp_path / "segchunks")
     docs = docs_df.select("doc_id", "content")
@@ -212,7 +213,8 @@ def test_compact_segments_equals_batch_segment_build(spark, docs_df,
 
 def test_delete_docs_tombstones(spark, docs_df, tmp_path):
     """LSM deletes: tombstone -> live view and compaction equal a batch
-    build over the surviving docs; a later re-ingest resurrects."""
+    build over the surviving docs; a later re-ingest brings a doc back;
+    a re-delivery without a delete supersedes the earlier version."""
     docs = docs_df.select("doc_id", "content")
     out = str(tmp_path / "ingest_del")
     writer = ingest.StreamingIndexWriter(out)
@@ -255,6 +257,47 @@ def test_delete_docs_tombstones(spark, docs_df, tmp_path):
     got3 = writer.live_index(spark).doc_stats.count()
     assert got3 == survivors.count()
 
+    # re-delivery WITHOUT a delete is an upsert (Lucene updateDocument):
+    # one survivor comes again unchanged, another with new content; only
+    # each doc's latest version is live
+    again, changed = [int(r["doc_id"]) for r in
+                      survivors.orderBy("doc_id").limit(2).collect()]
+    new_version = docs.where(ib.F.col("doc_id") == dead[1]).select(
+        ib.F.lit(changed).cast("long").alias("doc_id"), "content")
+    assert writer.next_batch_id() == 6
+    writer.process_batch(docs.where(ib.F.col("doc_id") == again)
+                         .unionByName(new_version), 6)
+    expect4 = (survivors.where(ib.F.col("doc_id") != changed)
+               .unionByName(new_version))
+    batch4 = ib.build_index(expect4)
+    live = writer.live_index(spark)
+    assert sorted(tuple(r) for r in live.postings.select(cols).collect()) \
+        == sorted(tuple(r) for r in batch4.postings.select(cols).collect())
+    # one doc_stats row per live doc, so BM25 sees the right N
+    ds_ids = [int(r["doc_id"]) for r in live.doc_stats.collect()]
+    assert sorted(ds_ids) == sorted(int(r["doc_id"])
+                                    for r in expect4.collect())
+    for terms in (["def"], ["return", "if"], ["def", "var_5_0"]):
+        assert q.boolean_and(live, terms).collect() == \
+            q.boolean_and(batch4, terms).collect()
+        assert [(r["doc_id"], round(r["score"], 9)) for r in
+                q.bm25_topk(live, terms, 10).collect()] == \
+            [(r["doc_id"], round(r["score"], 9)) for r in
+             q.bm25_topk(batch4, terms, 10).collect()]
+
+    # compact_segments after the re-delivery == a one-shot segment build
+    # over the live docs
+    seg_dir = str(tmp_path / "seg_redelivered")
+    writer.compact_segments(spark, seg_dir)
+    streamed = sg.read_segment_index(spark, seg_dir)
+    n, avgdl = batch4.collection_stats()
+    want_seg = sg.build_segment_index(ib.term_doc_tf_arrow(expect4), n, avgdl)
+    assert streamed.n_docs == n
+    assert {tuple(r) for r in sg.decode_segments_tf(streamed).collect()} \
+        == {tuple(r) for r in sg.decode_segments_tf(want_seg).collect()}
+    assert sg.topk(streamed, ["def", "return"], k=10) == pytest.approx(
+        sg.topk(want_seg, ["def", "return"], k=10))
+
 
 def test_analyzer_ingest_matches_batch_build(spark, docs_df, tmp_path):
     """Streaming deltas built with a non-identity analyzer compact to
@@ -293,8 +336,6 @@ def test_compact_emits_forward_layout(spark, docs_df, tmp_path):
     """compact(forward=True): a streamed index gains the doc-bucketed
     forward layout, and MLT over it equals the postings-scan path."""
     import dataclasses
-
-    from inverted_index_and_search_spark.operators import query as q
 
     chunks_dir = str(tmp_path / "fwd_chunks")
     docs = docs_df.select("doc_id", "content")
