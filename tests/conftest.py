@@ -3,6 +3,8 @@ corpus, and the pure-Python oracle index built on the same rows."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from inverted_index_and_search_spark import oracle
@@ -63,3 +65,22 @@ QUERY_SET: list[list[str]] = [
     ["g0x17"],                  # genome-doc unique token
     ["self", "class", "import"],
 ]
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted by a job group
+    of its own in the status tracker."""
+    sc = spark.sparkContext
+    group = f"tests-jobs-{next(_JOB_GROUPS)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    # the status store fills from the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -11,6 +11,7 @@ from hypothesis import strategies as st
 from inverted_index_and_search_spark.operators import index_build as ib
 from inverted_index_and_search_spark.operators import positional as pos
 from inverted_index_and_search_spark.operators import segments as seg
+from tests.conftest import spark_jobs
 
 PHRASES = [["def"], ["def", "trait"], ["return", "def"],
            ["trait", "def", "def"], ["def", "def"], ["def", "zzzqqqxx"]]
@@ -289,3 +290,15 @@ def test_phrase_server_hot_term_routes_distributed(psegs):
     assert [(d, round(s, 6)) for d, s in got] == \
            [(d, round(s, 6)) for d, s in want] and got
     assert not bounded._cache
+
+
+def test_phrase_server_first_seen_term_one_spark_job(spark, psegs):
+    """A first-seen phrase costs ONE Spark job (the bounded pruned
+    fetch, no separate df probe); a warm repeat costs none."""
+    srv = seg.QueryServer(psegs)
+    assert psegs.n_docs <= srv.max_term_df_warm
+    phrase = ["def", "trait"]
+    got, jobs = spark_jobs(spark, lambda: srv.phrase_topk(phrase, k=10))
+    assert got and jobs == 1
+    again, jobs = spark_jobs(spark, lambda: srv.phrase_topk(phrase, k=10))
+    assert again == got and jobs == 0

@@ -11,7 +11,7 @@ from inverted_index_and_search_spark import oracle
 from inverted_index_and_search_spark.kernels import bm25
 from inverted_index_and_search_spark.operators import index_build as ib
 from inverted_index_and_search_spark.operators import segments as seg
-from tests.conftest import QUERY_SET
+from tests.conftest import QUERY_SET, spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -450,3 +450,83 @@ def test_query_server_residency_bound_default_on(seg_index):
     # any other string fails at construction, not inside the first query
     with pytest.raises(ValueError, match="max_term_df_warm"):
         seg.QueryServer(seg_index, max_term_df_warm="Auto")
+
+
+def test_query_server_first_seen_term_one_spark_job(spark, seg_index):
+    """A first-seen term costs ONE Spark job: the df routing bound rides
+    in the pruned fetch's predicate instead of a separate df probe
+    (which cost two more jobs, an aggregate and its shuffle). With
+    n_docs <= max_term_df_warm a term the bounded fetch leaves out can
+    only be absent, so it is negatively cached from that same job."""
+    srv = seg.QueryServer(seg_index)
+    assert seg_index.n_docs <= srv.max_term_df_warm
+    got, jobs = spark_jobs(spark, lambda: srv.bm25_topk(["def"], k=10))
+    assert got and jobs == 1
+    none, jobs = spark_jobs(spark, lambda: srv.bm25_topk(["zzzqqqxx"]))
+    assert none == [] and jobs == 1 and srv._cache["zzzqqqxx"] is None
+    again, jobs = spark_jobs(spark, lambda: srv.bm25_topk(["def"], k=10))
+    assert again == got and jobs == 0
+
+
+def test_query_server_bounded_fetch_routing_parity(spark, seg_index,
+                                                   monkeypatch):
+    """max_term_df_warm=2 < n_docs, so a term the bounded fetch leaves
+    out may be present: the narrow term scan tells over-bound terms
+    from absent ones. Mixed queries rank and score like the unbounded
+    server, a routed query caches nothing, an absent term is negatively
+    cached without routing, and a routed repeat runs only batch_topk's
+    jobs."""
+    free = seg.QueryServer(seg_index, max_term_df_warm=None)
+    bounded = seg.QueryServer(seg_index, max_term_df_warm=2)
+    assert seg_index.n_docs > bounded.max_term_df_warm
+
+    def rounded(hits):
+        return [(d, round(s, 6)) for d, s in hits]
+
+    for terms in (["def", "var_3_0"], ["def", "zzzqqqxx"]):
+        for conj in (False, True):
+            want = free.bm25_topk(terms, k=10, conjunctive=conj)
+            got = bounded.bm25_topk(terms, k=10, conjunctive=conj)
+            assert rounded(got) == rounded(want), (terms, conj)
+        assert not bounded._cache, terms
+    assert bounded._over_bound == {"def"}
+
+    routed = []
+    orig_batch = seg.batch_topk
+    monkeypatch.setattr(seg, "batch_topk",
+                        lambda *a, **k: routed.append(a) or orig_batch(*a, **k))
+    assert bounded.bm25_topk(["zzzqqqxx"]) == free.bm25_topk(["zzzqqqxx"])
+    assert bounded._cache == {"zzzqqqxx": None} and not routed
+    assert bounded._over_bound == {"def"}
+
+    # a routed repeat: no fetch and no term scan (either would add a
+    # job), only the batch kernel's own jobs
+    _, batch_jobs = spark_jobs(spark, lambda: orig_batch(
+        seg_index, [(0, ["def", "var_3_0"])], k=10).collect())
+
+    def no_spark(*a, **k):
+        raise AssertionError("routed repeat probed the index")
+
+    monkeypatch.setattr(seg, "fetch_term_postings", no_spark)
+    got, jobs = spark_jobs(
+        spark, lambda: bounded.bm25_topk(["def", "var_3_0"], k=10))
+    assert rounded(got) == rounded(free.bm25_topk(["def", "var_3_0"], k=10))
+    assert len(routed) == 1 and jobs == batch_jobs
+
+
+def test_query_server_over_bound_set_stays_empty(seg_index, oracle_idx):
+    """Stated memory bound of the over-bound set: it holds only terms
+    with df > max_term_df_warm (so at most total postings / bound
+    terms) — 200 first-seen absent or rare terms leave it empty."""
+    srv = seg.QueryServer(seg_index, max_term_df_warm=2)
+    rare = sorted(t for t, p in oracle_idx.postings.items()
+                  if len(p) <= 2)[:100]
+    terms = rare + [f"zzabsent{i}" for i in range(200 - len(rare))]
+    for i in range(0, len(terms), 10):
+        srv.bm25_topk(terms[i:i + 10])
+    assert len(set(terms)) == 200 and all(t in srv._cache for t in terms)
+    assert not srv._over_bound
+    srv.bm25_topk(["def", "return"])
+    total = sum(len(p) for p in oracle_idx.postings.values())
+    assert srv._over_bound == {"def", "return"}
+    assert len(srv._over_bound) <= total / srv.max_term_df_warm
