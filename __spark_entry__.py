@@ -85,8 +85,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------- queries
 
 def _q_term_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tok = ib.tokens(_docs(spark, sf_dir), content_col="text", id_col="doc_id")
-    return ib.term_doc_tf(tok).select(
+    tf = ib.term_doc_tf_arrow(_docs(spark, sf_dir), content_col="text",
+                              id_col="doc_id")
+    return tf.select(
         "term", F.col("doc_id").cast("long").alias("doc_id"),
         F.col("tf").cast("long").alias("tf"),
     )
@@ -107,7 +108,7 @@ def _q_term_stats_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain = _q_term_stats(spark, sf_dir).select(
         F.lit("plain").alias("path"), "term", "df", "cf")
     docs = _docs(spark, sf_dir)
-    tf = ib.term_doc_tf(ib.tokens(docs, content_col="text", id_col="doc_id"))
+    tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
     p = ib.postings(tf, salt_hot_terms=True, hot_df=0, hot_sample_mod=1)
     salted = p.select(F.lit("salted").alias("path"), "term",
                       F.col("df").cast("long").alias("df"),
@@ -210,7 +211,7 @@ def _tf_segment_index(spark: SparkSession, sf_dir: str, *,
     """Compressed tf-only segment index over the documents table.
     ``all_hot=True`` forces EVERY term through the sharded layout."""
     docs = _docs(spark, sf_dir)
-    tf = ib.term_doc_tf(ib.tokens(docs, content_col="text", id_col="doc_id"))
+    tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
     n_docs, avgdl = _coll_stats(docs, tf)
     hot = (tf.select("term").distinct() if all_hot
            else ib.hot_terms_from_docs(docs, content_col="text"))
@@ -297,8 +298,7 @@ def _q_bm25_segment_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves = []
     for par in (0, 1):
         part = docs.where(F.pmod("doc_id", F.lit(2)) == par)
-        ptf = ib.term_doc_tf(
-            ib.tokens(part, content_col="text", id_col="doc_id"))
+        ptf = ib.term_doc_tf_arrow(part, content_col="text", id_col="doc_id")
         nd, ad = _coll_stats(part, ptf)
         halves.append(seg.build_segment_index(ptf, nd, ad))
     add("merged", seg.topk(seg.merge_segment_indexes(halves), Q_BM25, k=10))
@@ -390,8 +390,8 @@ def _q_term_tf_rawfiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inverted_index_and_search_spark.sources.files import docs_from_files
 
     docs = docs_from_files(spark, tmp)
-    tok = ib.tokens(docs, content_col="content", id_col="doc_id")
-    return ib.term_doc_tf(tok).select(
+    tf = ib.term_doc_tf_arrow(docs, content_col="content", id_col="doc_id")
+    return tf.select(
         "term", F.col("doc_id").cast("long").alias("doc_id"),
         F.col("tf").cast("long").alias("tf"))
 
@@ -411,7 +411,8 @@ def _q_phrase_match_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("phrase_tf").cast("int").alias("phrase_tf"))
     docs = _docs(spark, sf_dir)
-    tdp = pos.term_doc_positions(docs, content_col="text", id_col="doc_id")
+    tdp = pos.term_doc_positions_arrow(docs, content_col="text",
+                                       id_col="doc_id")
     all_terms = tdp.select("term").distinct()
     sharded = pos.positional_postings(tdp, hot=all_terms, shard_factor=8)
     idx = ib.Index(postings=sharded,
@@ -447,7 +448,8 @@ def _pos_segment_index(spark: SparkSession, sf_dir: str) -> seg.SegmentIndex:
     """Compressed POSITIONAL segment index over the documents table —
     shared by the phrase/proximity/batch segment driver entries."""
     docs = _docs(spark, sf_dir)
-    tdp = pos.term_doc_positions(docs, content_col="text", id_col="doc_id")
+    tdp = pos.term_doc_positions_arrow(docs, content_col="text",
+                                       id_col="doc_id")
     n_docs = docs.count()
     avgdl = float(
         tdp.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -525,8 +527,7 @@ def _q_batch_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, doc) pair, so the executor-side eval path is
     driver-verified, not just pytest'd."""
     docs = _docs(spark, sf_dir)
-    tok = ib.tokens(docs, content_col="text", id_col="doc_id")
-    tf = ib.term_doc_tf(tok)
+    tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
     n_docs = docs.count()
     avgdl = float(
         tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))

@@ -121,14 +121,13 @@ def main():
             # full build+write (the graded cells' bodies)
             def build_docs():
                 idx = ib.build_index(docs, content_col="text",
-                                     id_col="doc_id", use_pandas_udf=True)
+                                     id_col="doc_id")
                 ib.write_index(idx, f"{tmp}/idx_docs")
             out["build_docs_write"] = _timed(
                 spark, "build: docs write", build_docs)
 
             def build_synth():
-                idx = ib.build_index(corpus, use_pandas_udf=True,
-                                     salt_hot_terms=True)
+                idx = ib.build_index(corpus, salt_hot_terms=True)
                 ib.write_index(idx, f"{tmp}/idx_synth")
             out["build_synth_write"] = _timed(
                 spark, "build: synth write", build_synth)
@@ -159,8 +158,7 @@ def main():
             )
             from inverted_index_and_search_spark.operators import query as q
             docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-            idx = ib.build_index(docs, content_col="text", id_col="doc_id",
-                                 use_pandas_udf=True)
+            idx = ib.build_index(docs, content_col="text", id_col="doc_id")
             ib.write_index(idx, f"{tmp}/idx_docs_q")
             pidx = ib.read_index(spark, f"{tmp}/idx_docs_q")
             pidx.postings.cache().count()

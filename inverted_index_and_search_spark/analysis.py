@@ -27,9 +27,9 @@ match the index vocabulary — :func:`analyze_terms` is the query-side
 twin (CLI wires it to every term-based flag when ``--stopwords`` /
 ``--stem`` are given).
 
-All four implementations (pure-Python oracle, JVM expression, pandas
-batch, DuckDB SQL) are cross-tested for byte parity in
-tests/test_analysis.py.
+The three implementations (Python — the oracle, also run inside the
+standard tokenizer's Arrow tf kernels —, JVM expression, DuckDB SQL)
+are cross-tested for byte parity in tests/test_analysis.py.
 """
 
 from __future__ import annotations
@@ -167,10 +167,10 @@ class LangAnalyzer:
     only to ``stem_langs`` — it is an ENGLISH plural stemmer (Harman
     1991) and is deliberately never applied to other languages. Rows
     whose lang has no table entry get ``default`` (identity unless
-    overridden). Same 4-way parity obligations as :class:`Analyzer`:
-    JVM CASE dispatch over the per-lang filter chains, python row
-    dispatch (oracle + Arrow batches), DuckDB CASE twin — byte parity
-    asserted in tests/test_analysis.py."""
+    overridden). Same parity obligations as :class:`Analyzer`: JVM CASE
+    dispatch over the per-lang filter chains (the build path,
+    :func:`lang_tf`), python row dispatch (the oracle), DuckDB CASE
+    twin — byte parity asserted in tests/test_analysis.py."""
 
     analyzers: tuple[tuple[str, Analyzer], ...]
     default: Analyzer = IDENTITY
@@ -193,7 +193,7 @@ class LangAnalyzer:
                 return an
         return self.default
 
-    # ---- python (oracle + Arrow batch)
+    # ---- python (oracle)
 
     def analyze_py(self, tokens: list[str], lang: str | None) -> list[str]:
         return self.analyzer_for(lang).analyze_py(tokens)
@@ -237,48 +237,6 @@ def lang_tf(docs, la: LangAnalyzer, *, content_col: str = "content",
                         F.explode(tok).alias("term"))
             .groupBy("term", "doc_id")
             .agg(F.count("*").cast("int").alias("tf")))
-
-
-def lang_tf_arrow(docs, la: LangAnalyzer, *, content_col: str = "content",
-                  id_col: str = "doc_id", lang_col: str = "lang",
-                  tokenizer: str = "standard"):
-    """(term, doc_id, tf) — the Arrow in-mapper-combining twin of
-    :func:`lang_tf` (per-row lang dispatch inside the batch loop);
-    cross-tested byte-equal to the JVM path."""
-    import pandas as pd
-
-    from inverted_index_and_search_spark.tokenizer import (
-        code_tokenize_py, tokenize_batch)
-
-    code = tokenizer == "code"
-
-    def count_tf(batches):
-        from collections import Counter
-        for pdf in batches:
-            if code:
-                toks = [code_tokenize_py(s) if s is not None else []
-                        for s in pdf[content_col]]
-            else:
-                # tokenize_batch: ASCII fast path, null-safe (zero
-                # terms — mirrors the code branch's guard and the JVM
-                # twin's explode(null) row drop)
-                toks = tokenize_batch(pdf[content_col])
-            ids, terms, tfs = [], [], []
-            for doc_id, lang, words in zip(pdf[id_col], pdf[lang_col],
-                                           toks):
-                c = Counter(la.analyze_py(list(words), lang))
-                ids.extend([doc_id] * len(c))
-                terms.extend(c.keys())
-                tfs.extend(c.values())
-            yield pd.DataFrame({
-                "term": pd.Series(terms, dtype="object"),
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "tf": pd.Series(tfs, dtype="int32"),
-            })
-
-    return docs.select(F.col(id_col).alias(id_col), content_col,
-                       lang_col).mapInPandas(
-        count_tf, schema="term string, doc_id long, tf int")
 
 
 def _stem_lambda(t: Column) -> Column:

@@ -72,7 +72,6 @@ def build_resumable(
     content_col: str = "content",
     id_col: str = "doc_id",
     n_buckets: int = 8,
-    use_pandas_udf: bool = True,
     input_desc: str = "",
     on_bucket_done: Callable[[int], None] | None = None,
     tokenizer: str = "standard",
@@ -95,10 +94,8 @@ def build_resumable(
     # ---- stage 0: tokenize + tf + dl, bucketed materialization
     if not _committed(out_dir, "stage0"):
         t0 = time.perf_counter()
-        tok = ib.tokens(docs, use_pandas_udf=use_pandas_udf,
-                        content_col=content_col, id_col=id_col,
-                        tokenizer=tokenizer)
-        tf = ib.term_doc_tf(tok)
+        tf = ib.term_doc_tf_arrow(docs, content_col=content_col,
+                                  id_col=id_col, tokenizer=tokenizer)
         tf_dl = seg.tf_with_dl(tf).withColumn(
             "term_bucket", ib.term_bucket_col(F.col("term"), n_buckets)
         )

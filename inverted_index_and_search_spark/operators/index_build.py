@@ -17,8 +17,10 @@ per-term statistics for BM25, explicit term-hash bucketing
 terms (``salted`` path), typed ``struct<doc_id,tf>`` postings instead of
 ``"file:count"`` strings (reference ``spark/inverted_index_search.py:212``).
 
-Shuffle budget: exactly two wide exchanges (tf agg, postings agg) —
-the same count as the reference's winning DF variant, SURVEY.md §4.
+Shuffle budget: one wide exchange (the postings agg) for the standard
+tokenizer, whose Arrow tf kernel emits pre-counted rows; two (tf agg,
+postings agg) for the code tokenizer's JVM chain — the same count as
+the reference's winning DF variant, SURVEY.md §4.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inverted_index_and_search_spark.tokenizer import tokenize_pandas_udf, tokens_col
+from inverted_index_and_search_spark.tokenizer import tokenize_batch, tokenizer_col
 
 #: default number of term-hash buckets for the persisted index layout
 DEFAULT_BUCKETS = 32
@@ -92,23 +94,17 @@ def bucket_route_col(spark, bucket_col: F.Column, n_buckets: int) -> F.Column:
 _ROUTE_CACHE: dict = {}
 
 
-def tokens(docs: DataFrame, *, use_pandas_udf: bool = True,
-           content_col: str = "content", id_col: str = "doc_id",
-           analyzer=None, tokenizer: str = "standard") -> DataFrame:
-    """(doc_id, term) — one row per token occurrence.
-
-    ``use_pandas_udf=True`` is the north-star path (Arrow-vectorized);
-    ``False`` uses the pure-JVM expression tokenizer (whole-stage
-    codegen, fastest). Both are cross-tested for identical output.
+def tokens(docs: DataFrame, *, content_col: str = "content",
+           id_col: str = "doc_id", analyzer=None,
+           tokenizer: str = "standard") -> DataFrame:
+    """(doc_id, term) — one row per token occurrence, from the JVM
+    expression tokenizer (whole-stage codegen, no Python worker).
     ``analyzer`` (analysis.Analyzer) applies stopword/stem token
     filters as pure Catalyst array expressions — identity by default.
     ``tokenizer`` selects term semantics: ``"standard"`` (reference
     parity) or ``"code"`` (identifier splitting, tokenizer.py).
     """
-    from inverted_index_and_search_spark.tokenizer import (
-        tokenizer_col, tokenizer_pandas_udf)
-    mk = tokenizer_pandas_udf(tokenizer) if use_pandas_udf else tokenizer_col(tokenizer)
-    tok = mk(F.col(content_col))
+    tok = tokenizer_col(tokenizer)(F.col(content_col))
     if analyzer is not None and not analyzer.is_identity:
         tok = analyzer.analyze_tokens_col(tok)
     return docs.select(F.col(id_col).alias("doc_id"), F.explode(tok).alias("term"))
@@ -123,37 +119,38 @@ def term_doc_tf(tok: DataFrame) -> DataFrame:
 def term_doc_tf_arrow(docs: DataFrame, *, content_col: str = "content",
                       id_col: str = "doc_id", analyzer=None,
                       tokenizer: str = "standard") -> DataFrame:
-    """(term, doc_id, tf) computed *inside* the Arrow UDF — in-mapper
-    combining (the reference's ``TokenizerMapperStateful.java:29-66``)
-    done batch-vectorized.
+    """(term, doc_id, tf) — THE tf entry point of every builder: one
+    kernel per tokenizer, chosen by measurement (tokenizer.py module
+    docstring). The name predates that choice and stays because the
+    frozen bench scripts call and trace it.
 
-    vs :func:`tokens` + :func:`term_doc_tf`: no JVM explode of one row
-    per token occurrence and no (term, doc_id) shuffle at all — the UDF
-    emits already-unique (doc_id, term, tf) triples, shrinking stage
-    output ~tf-fold and removing the pipeline's biggest exchange. This
-    is the default tf path; the explode path is kept and cross-tested
-    for equality (tests/test_index_build.py).
+    ``tokenizer="standard"`` counts tf *inside* an Arrow batch loop —
+    in-mapper combining (the reference's
+    ``TokenizerMapperStateful.java:29-66``) done batch-vectorized: no
+    JVM explode of one row per token occurrence and no (term, doc_id)
+    shuffle; it emits already-unique (term, doc_id, tf) triples, so the
+    postings aggregation is the pipeline's only exchange.
+
+    ``tokenizer="code"`` runs the JVM chain (:func:`tokens` +
+    :func:`term_doc_tf`): its codegen'd boundary passes beat one Python
+    `regex` call per document even with the extra exchange.
     """
+    if tokenizer == "code":
+        return term_doc_tf(tokens(docs, content_col=content_col,
+                                  id_col=id_col, analyzer=analyzer,
+                                  tokenizer=tokenizer))
     import pandas as pd
-
-    from inverted_index_and_search_spark.tokenizer import (
-        code_tokenize_py, tokenize_batch)
 
     analyze = (None if analyzer is None or analyzer.is_identity
                else analyzer.analyze_py)
-    code = tokenizer == "code"
 
     def count_tf(batches):
         from collections import Counter
         for pdf in batches:
-            if code:
-                toks = [code_tokenize_py(s) if s is not None else []
-                        for s in pdf[content_col]]
-            else:
-                # tokenize_batch: ASCII translate+split fast path
-                # (~1.75x the regex), null-safe (zero terms, matching
-                # the JVM twin's explode(null) row drop)
-                toks = tokenize_batch(pdf[content_col])
+            # tokenize_batch: ASCII translate+split fast path (~1.75x
+            # the regex), null-safe (zero terms, matching the JVM
+            # twin's explode(null) row drop)
+            toks = tokenize_batch(pdf[content_col])
             ids, terms, tfs = [], [], []
             for doc_id, words in zip(pdf[id_col], toks):
                 c = Counter(words if analyze is None else analyze(words))
@@ -204,7 +201,6 @@ def hot_terms(tf: DataFrame, *, hot_df: int = DEFAULT_HOT_DF,
 def hot_terms_from_docs(docs: DataFrame, *, content_col: str = "content",
                         id_col: str = "doc_id", hot_df: int = DEFAULT_HOT_DF,
                         sample_mod: int = 100,
-                        use_pandas_udf: bool = False,
                         tokenizer: str = "standard",
                         analyzer=None) -> DataFrame:
     """(term) hot set detected by tokenizing a deterministic
@@ -216,13 +212,15 @@ def hot_terms_from_docs(docs: DataFrame, *, content_col: str = "content",
     races the main aggregation and the whole tokenize+tf pipeline runs
     twice concurrently. Sampling the *docs* plan instead pushes the
     pmod(doc_id) filter below the tokenizer (a distinct plan, no cache
-    interaction), so detection costs ~1% of one tokenize pass."""
+    interaction), so detection costs ~1% of one tokenize pass. Each
+    doc contributes its DISTINCT terms (array_distinct before the
+    explode), so df is one term-keyed count: a single exchange."""
     sampled = docs.where(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(sample_mod)) == 0)
-    tok = tokens(sampled, use_pandas_udf=use_pandas_udf,
-                 content_col=content_col, id_col=id_col,
-                 tokenizer=tokenizer, analyzer=analyzer)
-    df_s = (tok.groupBy("term", "doc_id").count()
+    tok = tokenizer_col(tokenizer)(F.col(content_col))
+    if analyzer is not None and not analyzer.is_identity:
+        tok = analyzer.analyze_tokens_col(tok)
+    df_s = (sampled.select(F.explode(F.array_distinct(tok)).alias("term"))
             .groupBy("term").count())
     return df_s.where(F.col("count") * sample_mod > hot_df).select("term")
 
@@ -368,17 +366,17 @@ class Index:
 
 
 def build_index(docs: DataFrame, *, content_col: str = "content",
-                id_col: str = "doc_id", use_pandas_udf: bool = True,
+                id_col: str = "doc_id", use_pandas_udf=None,
                 n_buckets: int = DEFAULT_BUCKETS,
                 salt_hot_terms: bool = False,
                 analyzer=None, tokenizer: str = "standard",
                 inline_dl: bool = False) -> Index:
-    """End-to-end logical plan for the index build (lazy).
+    """End-to-end logical plan for the index build (lazy); tf comes
+    from :func:`term_doc_tf_arrow`, the one kernel per tokenizer.
 
-    ``use_pandas_udf=True`` (north-star path) counts tf inside the
-    Arrow UDF (:func:`term_doc_tf_arrow`) — zero shuffles before the
-    postings aggregation. ``False`` is the pure-JVM expression path
-    (explode + two-level HashAggregate).
+    ``use_pandas_udf`` is accepted and ignored: the kernel is no longer
+    selectable, and the keyword stays only because the frozen bench
+    script still passes it.
 
     ``inline_dl=True`` pre-joins each doc's length onto its posting
     rows so every struct carries (doc_id, tf, dl) — scorers then skip
@@ -389,14 +387,8 @@ def build_index(docs: DataFrame, *, content_col: str = "content",
     join side — both partition on doc_id); default off because the
     broadcast is cheaper at test scale.
     """
-    if use_pandas_udf:
-        tf = term_doc_tf_arrow(docs, content_col=content_col, id_col=id_col,
-                               analyzer=analyzer, tokenizer=tokenizer)
-    else:
-        tok = tokens(docs, use_pandas_udf=False,
-                     content_col=content_col, id_col=id_col,
-                     analyzer=analyzer, tokenizer=tokenizer)
-        tf = term_doc_tf(tok)
+    tf = term_doc_tf_arrow(docs, content_col=content_col, id_col=id_col,
+                           analyzer=analyzer, tokenizer=tokenizer)
     hot = None
     if salt_hot_terms:
         hot = hot_terms_from_docs(docs, content_col=content_col,

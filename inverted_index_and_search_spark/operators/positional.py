@@ -99,30 +99,33 @@ def term_doc_positions_arrow(docs: DataFrame, *, content_col: str = "content",
                              id_col: str = "doc_id",
                              tokenizer: str = "standard",
                              analyzer=None) -> DataFrame:
-    """(term, doc_id, tf, positions) computed inside an Arrow UDF —
-    in-mapper combining with positions (the positional analogue of
-    index_build.term_doc_tf_arrow): no JVM token explode, no
-    (term,doc_id) pre-shuffle; the UDF emits already-unique rows.
-    Cross-tested equal to :func:`term_doc_positions`.
+    """(term, doc_id, tf, positions) — THE positions entry point of
+    every builder, one kernel per tokenizer (the positional analogue of
+    index_build.term_doc_tf_arrow; the name stays because the frozen
+    bench script calls it).
+
+    ``tokenizer="standard"`` collects positions inside an Arrow batch
+    loop — in-mapper combining with positions: no JVM token explode, no
+    (term, doc_id) pre-shuffle; the loop emits already-unique rows.
+    ``tokenizer="code"`` runs the JVM :func:`term_doc_positions`, which
+    measured faster than one Python `regex` pass per document.
     """
+    if tokenizer == "code":
+        return term_doc_positions(docs, content_col=content_col,
+                                  id_col=id_col, tokenizer=tokenizer,
+                                  analyzer=analyzer)
     import pandas as pd
 
-    from inverted_index_and_search_spark.tokenizer import (
-        code_tokenize_py, tokenize_batch)
+    from inverted_index_and_search_spark.tokenizer import tokenize_batch
 
-    code = tokenizer == "code"
     analyze = (None if analyzer is None or analyzer.is_identity
                else analyzer.analyze_py)
 
     def collect_pos(batches):
         for pdf in batches:
-            if code:
-                toks = [code_tokenize_py(s) if s is not None else []
-                        for s in pdf[content_col]]
-            else:
-                # tokenize_batch: ASCII fast path, null-safe (zero
-                # terms, matching the JVM twin's explode(null) drop)
-                toks = tokenize_batch(pdf[content_col])
+            # tokenize_batch: ASCII fast path, null-safe (zero terms,
+            # matching the JVM twin's explode(null) drop)
+            toks = tokenize_batch(pdf[content_col])
             if analyze is not None:
                 toks = [analyze(ws) for ws in toks]
             ids, terms, tfs, poss = [], [], [], []
@@ -228,7 +231,7 @@ def positional_postings(tdp: DataFrame, *,
 
 
 def build_positional_index(docs: DataFrame, *, content_col: str = "content",
-                           id_col: str = "doc_id", use_pandas_udf: bool = True,
+                           id_col: str = "doc_id",
                            n_buckets: int = DEFAULT_BUCKETS,
                            shard_hot_terms: bool = False,
                            tokenizer: str = "standard",
@@ -242,13 +245,9 @@ def build_positional_index(docs: DataFrame, *, content_col: str = "content",
     :func:`positional_postings`) — REQUIRED at corpus scale where a
     stop-word-class term's single merged row would be hundreds of MB;
     query results are identical either way (tested)."""
-    if use_pandas_udf:
-        tdp = term_doc_positions_arrow(docs, content_col=content_col,
-                                       id_col=id_col, tokenizer=tokenizer,
-                                       analyzer=analyzer)
-    else:
-        tdp = term_doc_positions(docs, content_col=content_col, id_col=id_col,
-                                 tokenizer=tokenizer, analyzer=analyzer)
+    tdp = term_doc_positions_arrow(docs, content_col=content_col,
+                                   id_col=id_col, tokenizer=tokenizer,
+                                   analyzer=analyzer)
     hot = None
     if shard_hot_terms:
         from inverted_index_and_search_spark.operators.index_build import (

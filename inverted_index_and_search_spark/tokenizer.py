@@ -14,27 +14,39 @@ regex bug (``spark/inverted_index_search.py:200`` leaves literal
 backslashes in tokens); source code contains backslashes and the other
 three variants agree on stripping them.
 
-Three equivalent implementations, cross-tested in
-``tests/test_tokenizer.py``:
+Equivalent implementations, cross-tested in ``tests/test_tokenizer.py``:
 
 - :func:`tokenize_py`     — pure-Python oracle (re module, ``\\w`` based)
-- :func:`tokens_col`      — JVM built-in expression (regexp_replace +
-                            split; whole-stage-codegen'd, zero Python)
-- :func:`tokenize_pandas_udf` — Arrow-vectorized pandas UDF (north-star
-                            path; batch string ops, no per-row Python)
+- :func:`tokenize_batch`  — the batch loop of the Arrow build kernels
+- :func:`tokens_col`      — JVM built-in expression (regexp extract-all;
+                            whole-stage-codegen'd, zero Python)
+- :func:`tokens_sql_duckdb` — the DuckDB SQL twin for the driver oracle
 
-And the matching ANSI/DuckDB SQL fragment for the correctness oracle:
-:data:`TOKENIZE_SQL_DUCKDB`.
+Each tokenizer builds with ONE tf kernel, chosen by measurement
+(local[4] on a 4-core VM, 20k synthetic files, noop sink, min-of-3 over
+two rounds, seconds):
+
+- ``standard`` runs :func:`tokenize_batch` inside the Arrow in-mapper
+  kernels (``index_build.term_doc_tf_arrow``,
+  ``positional.term_doc_positions_arrow``): one Python loop per Arrow
+  batch that emits already-counted (term, doc, tf) rows, so the tf
+  pass needs no (term, doc) exchange — tf 2.4-3.0 vs 3.1-3.2 for the
+  JVM explode+aggregate chain and 4.5-4.8 for a scalar pandas-UDF
+  tokenizer feeding the JVM count; positions 6.1-7.6 vs 7.1-9.5.
+- ``code`` runs the JVM chain (:func:`code_tokens_col`, explode, a
+  partial+final aggregate): its four boundary passes are codegen'd
+  regexp_replaces, while Python pays four `regex` substitutions per
+  document — tf 6.3-6.9 vs 11.3-12.8 for the Arrow loop, positions
+  11.0 vs 14.2-18.1. The pure-Python twin stays the query-side
+  tokenizer and the test oracle.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 #: Python-side regex: chars to blank out (reference RDD semantics:
 #: ``re.sub(r"[^\w\s]|_", " ", text.lower())`` then ``.split()``).
@@ -86,7 +98,7 @@ _ASCII_DEL = {i: " " for i in range(128)
 def tokenize_batch(strings) -> list[list[str]]:
     """Token lists for an iterable of (possibly-None) strings — the
     shared hot loop of every Arrow kernel (tf counting, positions,
-    sketches, the pandas-UDF tokenizer).
+    sketches).
 
     ASCII strings (the overwhelming case for code corpora) take a
     ``lower().translate().split()`` fast path — measured 1.75x the
@@ -107,14 +119,6 @@ def tokenize_batch(strings) -> list[list[str]]:
         else:
             ap(_PY_TOKEN.findall(s))
     return out
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_pandas_udf(content: pd.Series) -> pd.Series:
-    """Arrow-vectorized tokenizer (north-star path: batch loop with the
-    ASCII translate+split fast path, Unicode regex fallback — see
-    :func:`tokenize_batch`)."""
-    return pd.Series(tokenize_batch(content), index=content.index)
 
 
 def tokens_sql_duckdb(text_expr: str) -> str:
@@ -148,10 +152,17 @@ def tokens_sql_duckdb(text_expr: str) -> str:
 #   non-alphanumeric char is a separator, which splits snake_case for free).
 #
 # All engines run the SAME four substitution passes over explicit ASCII
-# classes, so the Spark expression, the Arrow batch path, the pure-Python
-# oracle and the DuckDB SQL twin are byte-parity-testable — same proof
-# obligation as the standard tokenizer above. The boundary classes are
-# deliberately ASCII ([A-Z]/[a-z]/[0-9]), NOT \p{Lu}/\p{Ll}: Unicode
+# classes, then lowercase, then extract — so the Spark expression (the
+# build kernel), the pure-Python twin (query side and oracle) and the
+# DuckDB SQL twin are byte-parity-testable, the same proof obligation as
+# the standard tokenizer above. The order lower-THEN-extract matters on
+# expanding lowercase mappings: U+0130 'İ' lowers to 'i' + U+0307 (a
+# combining mark, not a letter), so "xİy" is ["xi", "y"] on the JVM and
+# in Python; extracting first and lowercasing each token would keep
+# "xi̇y" whole and the query side would miss the JVM-built term
+# (DuckDB's utf8proc lower() maps 'İ' to a bare 'i', one of the lower()
+# table differences the ASCII driver fixture never meets). The boundary
+# classes are deliberately ASCII ([A-Z]/[a-z]/[0-9]), NOT \p{Lu}/\p{Ll}: Unicode
 # category membership differs across regex engines' Unicode tables
 # (Python `regex` vs RE2 vs Java — e.g. U+0295 'ʕ' is lowercase in some
 # tables only), which falsified the 4-way parity invariant on non-ASCII
@@ -163,6 +174,19 @@ def tokens_sql_duckdb(text_expr: str) -> str:
 # lookahead, which RE2 (the DuckDB oracle engine) does not support —
 # the 4-pass form is chosen for provable oracle parity, and it is
 # opt-in (`tokenizer="code"`).
+#
+# Unicode-version drift (every JVM-tokenized surface, both tokenizers):
+# Java 17's character tables are Unicode 13, Python's (`re`, str.lower)
+# are 14.0. In U+0020-U+2FFF they disagree on 40 code points, all
+# letters new in Unicode 14 that the JVM treats as separators and Python
+# keeps as token chars: U+0870-0887, U+0889-088E, U+08B5, U+08C8-08C9
+# (Arabic), U+0C5D (Telugu), U+0CDD (Kannada), U+170D, U+171F
+# (Tagalog), U+1B4C (Balinese), U+2C2F, U+2C5F (Glagolitic). The code
+# tokenizer's `regex` module has newer tables still and adds five code
+# points unassigned for the other two (U+088F, U+0C5C, U+0CDC, U+1C89,
+# U+1C8A). A JVM-built index and a Python-tokenized query split text
+# holding these differently; this follows the JDK and is documented,
+# not fixed. Every other code point in the range tokenizes alike.
 # ---------------------------------------------------------------------------
 
 #: identical pattern text for Java, RE2 and the `regex`/`re` modules;
@@ -191,26 +215,17 @@ def code_tokenize_py(text: str) -> list[str]:
         raise ImportError("code tokenizer oracle requires the `regex` module")
     for pat in _CODE_PASSES_PY:
         text = pat.sub(r"\1 \2", text)
-    return [t.lower() for t in _CODE_TOKEN_PY.findall(text)]
+    return _CODE_TOKEN_PY.findall(text.lower())
 
 
 def code_tokens_col(content: Column) -> Column:
     """JVM-expression code tokenizer: 4 codegen'd regexp_replace passes
     (case/class boundary -> space) then the standard lower+extract.
-    No Python worker; the hot default for ``tokenizer="code"`` builds."""
+    No Python worker; the build kernel of ``tokenizer="code"``."""
     out = content
     for pat in CODE_BOUNDARY_PATTERNS:
         out = F.regexp_replace(out, pat, r"$1 $2")
     return F.regexp_extract_all(F.lower(out), F.lit(JAVA_TOKEN_REGEX), F.lit(0))
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def code_tokenize_pandas_udf(content: pd.Series) -> pd.Series:
-    """Arrow-batched code tokenizer (regex-module batch loop; same
-    per-string regex work as pandas ``.str`` ops, which also dispatch
-    per element for object dtype)."""
-    return pd.Series([code_tokenize_py(s) if s is not None else []
-                      for s in content], index=content.index)
 
 
 def code_tokens_sql_duckdb(text_expr: str) -> str:
@@ -242,10 +257,3 @@ def tokenizer_col(name: str):
     if name == "code":
         return code_tokens_col
     return tokens_col
-
-
-def tokenizer_pandas_udf(name: str):
-    """(name -> pandas_udf tokenizer) for the Arrow build path."""
-    if name == "code":
-        return code_tokenize_pandas_udf
-    return tokenize_pandas_udf

@@ -1,6 +1,7 @@
 """Analyzer pipeline: S-stemmer cross-implementation byte parity
 (python / JVM expression / DuckDB SQL), stopword filtering, analyzed
-index builds (both tf paths), meta.json persistence, and the CLI
+index builds (both tf kernels: the standard tokenizer's Arrow loop and
+the code tokenizer's JVM chain), meta.json persistence, and the CLI
 query-side twin."""
 
 from __future__ import annotations
@@ -81,29 +82,31 @@ def test_analyzer_identity_and_order():
     assert a.analyze_terms(["THE", "Queries"]) == ["query"]
 
 
-@pytest.mark.parametrize("use_pandas_udf", [True, False],
+@pytest.mark.parametrize("tokenizer", ["standard", "code"],
                          ids=["arrow", "jvm"])
 def test_analyzed_build_matches_python_oracle(spark, docs_df, corpus_pdf,
-                                              use_pandas_udf):
-    """Both tf paths under an analyzer == pure-python tokenize ->
-    analyze -> count, exactly (terms, tfs, and doc lengths)."""
+                                              tokenizer):
+    """Both tf kernels under an analyzer (the standard tokenizer builds
+    with the Arrow loop, the code tokenizer with the JVM chain) ==
+    pure-python tokenize -> analyze -> count, exactly (terms, tfs, and
+    doc lengths)."""
     from collections import Counter
 
-    from inverted_index_and_search_spark.tokenizer import tokenize_py
+    from inverted_index_and_search_spark.tokenizer import tokenizer_py
 
+    tokenize = tokenizer_py(tokenizer)
     ana = Analyzer.make(["def", "return"], stem=True)
-    idx = ib.build_index(docs_df, use_pandas_udf=use_pandas_udf,
-                         analyzer=ana)
+    idx = ib.build_index(docs_df, analyzer=ana, tokenizer=tokenizer)
     got = {(r["term"], r["doc_id"], r["tf"]) for r in idx.tf.collect()}
     want = set()
     for doc_id, content in zip(corpus_pdf["doc_id"], corpus_pdf["content"]):
-        for t, c in Counter(ana.analyze_py(tokenize_py(content))).items():
+        for t, c in Counter(ana.analyze_py(tokenize(content))).items():
             want.add((t, int(doc_id), c))
     assert got == want
     # doc length counts post-analysis tokens
     dls = {r["doc_id"]: r["dl"] for r in idx.doc_stats.collect()}
     for doc_id, content in zip(corpus_pdf["doc_id"], corpus_pdf["content"]):
-        assert dls[int(doc_id)] == len(ana.analyze_py(tokenize_py(content)))
+        assert dls[int(doc_id)] == len(ana.analyze_py(tokenize(content)))
 
 
 def test_analyzer_roundtrips_through_meta(spark, docs_df, tmp_path):
@@ -204,19 +207,30 @@ def test_analyzed_positional_phrase_renumbered(spark, ana_docs):
     assert got == [1]
 
 
-def test_analyzed_positional_paths_agree(spark, docs_df):
+def test_analyzed_positional_paths_agree(spark, docs_df, corpus_pdf):
+    """The positions entry point under an analyzer, for both tokenizers
+    (Arrow loop / JVM chain) == the python oracle: post-analysis
+    (renumbered) offsets per (term, doc)."""
     from inverted_index_and_search_spark.operators.positional import (
-        term_doc_positions, term_doc_positions_arrow)
+        term_doc_positions_arrow)
+    from inverted_index_and_search_spark.tokenizer import tokenizer_py
 
     ana = Analyzer.make(["def", "return"], stem=True)
-    a = term_doc_positions_arrow(docs_df, analyzer=ana)
-    b = term_doc_positions(docs_df, analyzer=ana)
-    ra = {(r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
-          for r in a.collect()}
-    rb = {(r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
-          for r in b.collect()}
-    assert ra == rb and ra
-    assert not any(t in ("def", "return") for t, *_ in ra)
+    for tokenizer in ("standard", "code"):
+        tokenize = tokenizer_py(tokenizer)
+        got = {(r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
+               for r in term_doc_positions_arrow(
+                   docs_df, analyzer=ana, tokenizer=tokenizer).collect()}
+        want = set()
+        for doc_id, content in zip(corpus_pdf["doc_id"],
+                                   corpus_pdf["content"]):
+            offs: dict[str, list[int]] = {}
+            for i, t in enumerate(ana.analyze_py(tokenize(content))):
+                offs.setdefault(t, []).append(i)
+            want |= {(t, int(doc_id), len(p), tuple(p))
+                     for t, p in offs.items()}
+        assert got == want and got, tokenizer
+        assert not any(t in ("def", "return") for t, *_ in got)
 
 
 def test_cli_analyzed_segments_build_and_search(spark, tmp_path, capsys):
@@ -286,17 +300,15 @@ def test_cli_analyzed_fielded_build(spark, tmp_path, capsys):
 # ------------------------------------------- per-language dispatch (r5)
 
 def test_lang_analyzer_dispatch_parity(spark, docs_df, corpus_pdf):
-    """JVM CASE dispatch == Arrow batch dispatch == pure-python row
-    dispatch over the fixture corpus (which carries a lang column)."""
+    """JVM CASE dispatch == pure-python row dispatch over the fixture
+    corpus (which carries a lang column)."""
     from inverted_index_and_search_spark import analysis as an
     from inverted_index_and_search_spark.tokenizer import tokenize_py
 
     la = an.LangAnalyzer.make()
     jvm = sorted(tuple(r) for r in an.lang_tf(
         docs_df, la).collect())
-    arrow = sorted(tuple(r) for r in an.lang_tf_arrow(
-        docs_df, la).collect())
-    assert jvm == arrow and jvm
+    assert jvm
     # python oracle twin
     from collections import Counter
     want = []

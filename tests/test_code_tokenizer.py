@@ -1,10 +1,10 @@
-"""Code-aware tokenizer: 4-way parity (pure-Python oracle, JVM
-expression, Arrow pandas UDF, DuckDB SQL) + build/query integration.
+"""Code-aware tokenizer: 3-way parity (pure-Python twin, JVM
+expression — the build kernel —, DuckDB SQL) + build/query integration.
 
 The corpus is source code (north-star input shape); `tokenizer="code"`
 splits identifiers at case/class boundaries (Lucene WordDelimiter
 semantics, deterministic subset) so `filename` matches `getFileName`
-and `file_name`. All four implementations run the SAME four
+and `file_name`. All three implementations run the SAME four
 substitution passes — byte parity is the proof obligation, exactly as
 for the standard tokenizer (tests/test_tokenizer.py).
 """
@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from inverted_index_and_search_spark.operators import index_build as ib
 from inverted_index_and_search_spark.operators import query as q
 from inverted_index_and_search_spark.tokenizer import (
-    code_tokenize_pandas_udf,
     code_tokenize_py,
     code_tokens_col,
     code_tokens_sql_duckdb,
@@ -52,6 +51,11 @@ CASES = [
     "überÜberStraße",
     "aÀ ʕaʔb Ǆx",
     "naïveCamelCase étage2Vec",
+    # expanding lowercase mapping: 'İ' lowers to 'i' + U+0307 (a
+    # combining mark), which must split the token in Python as on the
+    # JVM — lowercase BEFORE extracting runs
+    "xİy",
+    "İstanbul",
 ]
 
 EXPECT = {
@@ -73,20 +77,21 @@ def test_expected_splits():
 
 
 def test_py_vs_jvm_vs_pandas_vs_duckdb(spark):
+    """Python twin == JVM build kernel on every case; == DuckDB on the
+    cases whose characters DuckDB's lower() table maps like Python's
+    (see :func:`_lower_tables_agree`; 'İ' is the known exception)."""
     df = spark.createDataFrame([(i, s) for i, s in enumerate(CASES)],
                                "i long, content string")
     jvm = {r["i"]: r["t"] for r in
            df.select("i", code_tokens_col(F.col("content")).alias("t"))
            .collect()}
-    arrow = {r["i"]: r["t"] for r in
-             df.select("i", code_tokenize_pandas_udf(F.col("content"))
-                       .alias("t")).collect()}
     con = duckdb.connect()
     sql = code_tokens_sql_duckdb("content")
     for i, s in enumerate(CASES):
         py = code_tokenize_py(s)
         assert jvm[i] == py, f"JVM mismatch on {s!r}"
-        assert arrow[i] == py, f"Arrow mismatch on {s!r}"
+        if not all(_lower_tables_agree(c) for c in s):
+            continue
         duck = con.execute(
             f"SELECT {sql} FROM (SELECT ? AS content)", [s]).fetchone()[0]
         assert duck == py, f"DuckDB mismatch on {s!r}"
@@ -128,20 +133,13 @@ def code_idx(spark, docs_df):
 def test_code_index_vocabulary(spark, docs_df, code_idx, corpus_pdf):
     # per-doc oracle recount with the python code tokenizer
     from collections import Counter
-    want = Counter()
+    want_df, want_cf = Counter(), Counter()
     for text in corpus_pdf["content"]:
-        for t in set(code_tokenize_py(text)):
-            want[t] += 1
-    got = {r["term"]: r["df"] for r in code_idx.postings.collect()}
-    assert got == dict(want)
-
-
-def test_code_index_jvm_arrow_paths_agree(spark, docs_df):
-    a = ib.build_index(docs_df, tokenizer="code", use_pandas_udf=True)
-    b = ib.build_index(docs_df, tokenizer="code", use_pandas_udf=False)
-    ra = {(r["term"], r["df"], r["cf"]) for r in a.postings.collect()}
-    rb = {(r["term"], r["df"], r["cf"]) for r in b.postings.collect()}
-    assert ra == rb
+        toks = code_tokenize_py(text)
+        want_df.update(set(toks))
+        want_cf.update(toks)
+    got = {r["term"]: (r["df"], r["cf"]) for r in code_idx.postings.collect()}
+    assert got == {t: (want_df[t], want_cf[t]) for t in want_df}
 
 
 WDF_ROWS = [
@@ -170,19 +168,6 @@ def test_code_positional_phrase_wdf_semantics(spark, wdf_docs):
     got = sorted(r["doc_id"] for r in
                  phrase_match(idx, ["get", "file", "name"]).collect())
     assert got == [0, 1]
-
-
-def test_code_positional_paths_agree(spark, docs_df):
-    from inverted_index_and_search_spark.operators.positional import (
-        term_doc_positions, term_doc_positions_arrow)
-
-    a = term_doc_positions_arrow(docs_df, tokenizer="code")
-    b = term_doc_positions(docs_df, tokenizer="code")
-    ra = {(r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
-          for r in a.collect()}
-    rb = {(r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
-          for r in b.collect()}
-    assert ra == rb and ra
 
 
 def test_cli_segments_code_tokenizer(spark, wdf_docs, tmp_path, capsys):

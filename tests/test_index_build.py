@@ -12,7 +12,7 @@ from inverted_index_and_search_spark.operators import index_build as ib
 
 @pytest.fixture(scope="module")
 def index(docs_df):
-    return ib.build_index(docs_df, use_pandas_udf=True)
+    return ib.build_index(docs_df)
 
 
 def _postings_as_dict(postings_rows):
@@ -30,13 +30,6 @@ def test_postings_exact(index, oracle_idx):
     assert set(got) == set(want)
     for t in want:
         assert got[t] == want[t], t
-
-
-def test_builtin_tokenizer_same_index(docs_df, index):
-    other = ib.build_index(docs_df, use_pandas_udf=False)
-    a = _postings_as_dict(index.postings.collect())
-    b = _postings_as_dict(other.postings.collect())
-    assert a == b
 
 
 def test_df_cf_stats(index, oracle_idx):
@@ -79,8 +72,7 @@ def test_salted_path_identical_with_forced_hot_set(docs_df, index):
     every term 'hot' (all rows salted), the opposite extreme of the
     default threshold where nothing at test scale is hot — output must
     be byte-identical either way."""
-    tok = ib.tokens(docs_df, use_pandas_udf=False)
-    tf = ib.term_doc_tf(tok)
+    tf = ib.term_doc_tf_arrow(docs_df)
     hot = ib.hot_terms(tf, hot_df=0, sample_mod=1)
     assert hot.count() == index.postings.count()  # every term flagged
     forced = ib.postings(tf, salt_hot_terms=True, hot_df=0, hot_sample_mod=1)
@@ -94,8 +86,7 @@ def test_salted_path_identical_with_mixed_hot_set(spark, docs_df, index):
     """Explicit PARTIAL hot set: some terms route through the two-phase
     merge, the rest finalize in phase 1 (the round-3 split plan) —
     output must still be byte-identical to the unsalted build."""
-    tok = ib.tokens(docs_df, use_pandas_udf=False)
-    tf = ib.term_doc_tf(tok)
+    tf = ib.term_doc_tf_arrow(docs_df)
     hot = spark.createDataFrame(
         [("def",), ("return",), ("zzznothere",)], "term string")
     mixed = ib.postings(tf, salt_hot_terms=True, hot=hot)
@@ -110,8 +101,7 @@ def test_salted_phase2_merges_hot_terms_only(spark, docs_df):
     the hot branch: one flatten aggregate in the plan, fed by a filter
     on the hot flag, unioned with the already-final cold rows — round 2
     re-shuffled the ENTIRE postings payload through phase 2."""
-    tok = ib.tokens(docs_df, use_pandas_udf=False)
-    tf = ib.term_doc_tf(tok)
+    tf = ib.term_doc_tf_arrow(docs_df)
     hot = spark.createDataFrame([("def",)], "term string")
     plan = (ib.postings(tf, salt_hot_terms=True, hot=hot)
             ._jdf.queryExecution().optimizedPlan().toString())

@@ -29,22 +29,58 @@ def n_nodes(plan: str, op: str) -> int:
     return len(re.findall(rf"^\(\d+\) {op}\b", plan, re.MULTILINE))
 
 
+#: physical nodes that run Python per row or per batch
+PY_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
 def test_postings_build_has_two_exchanges_jvm_path(spark):
+    """The code tokenizer's tf entry point is the JVM chain: explode +
+    partial/final count, then the postings agg — no Python node."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    tf = ib.term_doc_tf(ib.tokens(docs, use_pandas_udf=False,
-                                  content_col="text", id_col="doc_id"))
+    tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id",
+                              tokenizer="code")
     plan = explain(ib.postings(tf))
     assert n_nodes(plan, "Exchange") == 2, plan
     assert "partial_count" in plan  # map-side combine = reference's IMC
+    assert not any(n in plan for n in PY_NODES), plan
 
 
 def test_arrow_tf_path_has_no_pre_agg_exchange(spark):
+    """The standard tokenizer's tf entry point is the Arrow in-mapper
+    kernel: one MapInPandas, no scalar Python UDF node."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
     plan = explain(ib.postings(tf))
     # only the postings agg exchanges; tf itself is shuffle-free
     assert n_nodes(plan, "Exchange") == 1, plan
-    assert "MapInPandas" in plan
+    assert n_nodes(plan, "MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_code_positions_path_is_jvm(spark):
+    """Positions twin of the code-tokenizer tf gate: posexplode +
+    aggregate, then the positional postings agg — no Python node."""
+    from inverted_index_and_search_spark.operators import positional as pp
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    tdp = pp.term_doc_positions_arrow(docs, content_col="text",
+                                      id_col="doc_id", tokenizer="code")
+    plan = explain(pp.positional_postings(tdp))
+    assert n_nodes(plan, "Exchange") == 2, plan
+    assert not any(n in plan for n in PY_NODES), plan
+
+
+def test_arrow_positions_path_has_no_pre_agg_exchange(spark):
+    """Positions twin of the standard-tokenizer tf gate."""
+    from inverted_index_and_search_spark.operators import positional as pp
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    tdp = pp.term_doc_positions_arrow(docs, content_col="text",
+                                      id_col="doc_id")
+    plan = explain(pp.positional_postings(tdp))
+    assert n_nodes(plan, "Exchange") == 1, plan
+    assert n_nodes(plan, "MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_scan_prunes_columns(spark):
@@ -208,7 +244,7 @@ def persisted_positional_index(spark, tmp_path_factory):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     idx = pos.build_positional_index(docs, content_col="text",
-                                     id_col="doc_id", use_pandas_udf=False)
+                                     id_col="doc_id")
     out = str(tmp_path_factory.mktemp("planpidx"))
     ib.write_index(idx, out)
     return ib.read_index(spark, out)
@@ -282,14 +318,19 @@ def test_sharded_segments_build_has_no_payload_window(spark):
     from inverted_index_and_search_spark.operators import segments as seg
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    tf = ib.term_doc_tf(ib.tokens(docs, use_pandas_udf=False,
-                                  content_col="text", id_col="doc_id"))
+    tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
     grouped = seg.grouped_postings_arrays(
         seg.tf_with_dl(tf), hot=tf.select("term").distinct())
     plan = explain(grouped)
     assert n_nodes(plan, "Window") == 0, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "InMemoryTableScan" in plan, plan
+    # the hot set real builds pass (hot_terms_from_docs) counts df as
+    # one term-keyed aggregation over the ~1% doc sample: one exchange
+    for tokenizer in ("standard", "code"):
+        hot_plan = explain(ib.hot_terms_from_docs(
+            docs, content_col="text", tokenizer=tokenizer))
+        assert n_nodes(hot_plan, "Exchange") == 1, hot_plan
 
 
 def test_route_cache_keyed_by_application_id(spark):

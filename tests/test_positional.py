@@ -51,29 +51,28 @@ def oracle_near(corpus_pdf, a: str, b: str, w: int) -> list[int]:
 
 @pytest.fixture(scope="module")
 def pidx(docs_df):
-    idx = pos.build_positional_index(docs_df, use_pandas_udf=False)
+    idx = pos.build_positional_index(docs_df)
     idx.postings.cache().count()
     idx.doc_stats.cache().count()
     return idx
 
 
-def test_positional_paths_identical(docs_df):
-    """JVM posexplode path == Arrow in-mapper path, row for row."""
-    jvm = pos.term_doc_positions(docs_df).orderBy("term", "doc_id")
-    arrow = pos.term_doc_positions_arrow(docs_df).orderBy("term", "doc_id")
-    assert jvm.collect() == arrow.collect()
+@pytest.mark.parametrize("tokenizer", ["standard", "code"])
+def test_positions_match_token_offsets(docs_df, corpus_pdf, tokenizer):
+    """Positions from the entry point (the Arrow loop for "standard",
+    the JVM chain for "code") are exactly the 0-based token offsets of
+    the term under the python twin of that tokenizer."""
+    from inverted_index_and_search_spark.tokenizer import tokenizer_py
 
-
-def test_positions_match_token_offsets(docs_df, corpus_pdf):
-    """Positions are exactly the 0-based token offsets of the term."""
     got = {
         (r["term"], int(r["doc_id"])): list(r["positions"])
-        for r in pos.term_doc_positions(docs_df).collect()
+        for r in pos.term_doc_positions_arrow(
+            docs_df, tokenizer=tokenizer).collect()
     }
     # spot-check every term of a handful of docs, fully
     for doc_id, content in list(
             zip(corpus_pdf["doc_id"], corpus_pdf["content"]))[:5]:
-        toks = tokenize_py(content)
+        toks = tokenizer_py(tokenizer)(content)
         want: dict[str, list[int]] = {}
         for i, t in enumerate(toks):
             want.setdefault(t, []).append(i)
@@ -92,7 +91,7 @@ def test_phrase_match_oracle(pidx, corpus_pdf, phrase):
 def test_phrase_overlapping_counts(spark):
     docs = spark.createDataFrame(
         [(0, "a a a a"), (1, "b a a b")], "doc_id long, content string")
-    idx = pos.build_positional_index(docs, use_pandas_udf=False)
+    idx = pos.build_positional_index(docs)
     got = {r["doc_id"]: r["phrase_tf"]
            for r in pos.phrase_match(idx, ["a", "a"]).collect()}
     assert got == {0: 3, 1: 1}
@@ -137,7 +136,7 @@ def test_phrase_bm25_ranks_by_phrase_tf(spark):
     docs = spark.createDataFrame(
         [(0, "x y q q q q q q"), (1, "x y x y q q q q"),
          (2, "q q q q q q q q")], "doc_id long, content string")
-    idx = pos.build_positional_index(docs, use_pandas_udf=False)
+    idx = pos.build_positional_index(docs)
     got = [int(r["doc_id"])
            for r in pos.phrase_bm25_topk(idx, ["x", "y"], k=3).collect()]
     assert got == [1, 0]
@@ -220,7 +219,7 @@ def test_sharded_positional_results_identical(spark, docs_df, oracle_idx,
                  .select("term").distinct())
     tdp = pos.term_doc_positions(docs_df)
     sharded = pos.positional_postings(tdp, hot=all_terms, shard_factor=8)
-    base = pos.build_positional_index(docs_df, use_pandas_udf=False)
+    base = pos.build_positional_index(docs_df)
     from inverted_index_and_search_spark.operators.index_build import (
         Index,
         doc_stats,
@@ -259,7 +258,7 @@ def test_same_term_window_needs_two_occurrences(spark):
     docs = spark.createDataFrame(
         [(0, "x q x"), (1, "q x q"), (2, "x x")],
         "doc_id long, content string")
-    idx = pos.build_positional_index(docs, use_pandas_udf=False)
+    idx = pos.build_positional_index(docs)
     got = [int(r["doc_id"])
            for r in pos.terms_within_window(idx, "x", "x", 2).collect()]
     assert got == [0, 2]  # doc 1 has one 'x' only -> no self-match
@@ -277,7 +276,7 @@ def test_sharded_index_text_sink_one_line_per_term(spark, docs_df):
     sharded = Index(
         postings=pos.positional_postings(tdp, hot=all_terms, shard_factor=8),
         doc_stats=doc_stats(docs_df, tdp), tf=tdp, sharded=True)
-    base = pos.build_positional_index(docs_df, use_pandas_udf=False)
+    base = pos.build_positional_index(docs_df)
     lines_s = sorted(r["value"] for r in postings_text_lines(sharded).collect())
     lines_b = sorted(r["value"] for r in postings_text_lines(base).collect())
     assert lines_s == lines_b

@@ -52,7 +52,7 @@ def psegs(spark, docs_df):
 
 @pytest.fixture(scope="module")
 def pidx(docs_df):
-    idx = pos.build_positional_index(docs_df, use_pandas_udf=False)
+    idx = pos.build_positional_index(docs_df)
     idx.postings.cache().count()
     idx.doc_stats.cache().count()
     return idx
@@ -90,7 +90,7 @@ def test_query_server_phrase(psegs, pidx):
 
 
 def test_non_positional_segments_reject_phrase(spark, docs_df):
-    tf = ib.term_doc_tf(ib.tokens(docs_df, use_pandas_udf=False))
+    tf = ib.term_doc_tf_arrow(docs_df)
     n_docs = docs_df.count()
     sidx = seg.build_segment_index(tf, n_docs, 100.0, salt_hot_terms=False)
     with pytest.raises(ValueError, match="positional"):

@@ -125,7 +125,7 @@ def oracle_eval(toks: dict[int, list[str]], node) -> set[int]:
 
 @pytest.fixture(scope="module")
 def pidx(docs_df):
-    idx = pos.build_positional_index(docs_df, use_pandas_udf=False)
+    idx = pos.build_positional_index(docs_df)
     idx.postings.cache().count()
     return idx
 

@@ -405,8 +405,7 @@ def _pidx_for(seg_index, docs_df):
     key = id(seg_index)
     if key not in _PIDX_CACHE:
         from inverted_index_and_search_spark.operators import positional as pos
-        _PIDX_CACHE[key] = pos.build_positional_index(
-            docs_df, use_pandas_udf=False)
+        _PIDX_CACHE[key] = pos.build_positional_index(docs_df)
     return _PIDX_CACHE[key]
 
 

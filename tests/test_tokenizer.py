@@ -1,6 +1,7 @@
 """Tokenizer parity: all engine implementations (pure-Python oracle,
-JVM built-in expression, Arrow pandas UDF, DuckDB oracle SQL) must
-produce identical token streams (SURVEY.md §2.8 canonical semantics)."""
+JVM built-in expression, the Arrow kernels' batch loop, DuckDB oracle
+SQL) must produce identical token streams (SURVEY.md §2.8 canonical
+semantics)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from inverted_index_and_search_spark.tokenizer import (
-    tokenize_pandas_udf,
     tokenize_py,
     tokens_col,
     tokens_sql_duckdb,
@@ -42,14 +42,6 @@ def test_builtin_matches_py(spark, corpus_pdf):
     texts = EDGE_CASES + corpus_pdf["content"].head(20).tolist()
     df = spark.createDataFrame(pd.DataFrame({"content": texts}))
     got = [r[0] or [] for r in df.select(tokens_col(F.col("content"))).collect()]
-    want = [tokenize_py(t) for t in texts]
-    assert got == want
-
-
-def test_pandas_udf_matches_py(spark, corpus_pdf):
-    texts = EDGE_CASES + corpus_pdf["content"].head(20).tolist()
-    df = spark.createDataFrame(pd.DataFrame({"content": texts}))
-    got = [r[0] or [] for r in df.select(tokenize_pandas_udf(F.col("content"))).collect()]
     want = [tokenize_py(t) for t in texts]
     assert got == want
 

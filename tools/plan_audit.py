@@ -105,12 +105,10 @@ def main() -> None:
         "the prefix sum, never data rows.",
         explain(with_doc_id(corpus_df(spark, 200, partitions=4)))))
 
-    tf2 = ib.term_doc_tf(ib.tokens(docs, use_pandas_udf=False,
-                                   content_col="text", id_col="doc_id"))
     from inverted_index_and_search_spark.operators import segments as sg
     n_docs = docs.count()
     avgdl = 100.0
-    sidx = sg.build_segment_index(tf2, n_docs, avgdl)
+    sidx = sg.build_segment_index(tf, n_docs, avgdl)
     seg_tmp = tempfile.mkdtemp(prefix="iis_plan_seg_")
     sg.write_segment_index(sidx, seg_tmp)
     psidx = sg.read_segment_index(spark, seg_tmp)
@@ -127,7 +125,7 @@ def main() -> None:
     from inverted_index_and_search_spark.operators import positional as pp
     ptmp = tempfile.mkdtemp(prefix="iis_plan_pos_")
     pidx0 = pp.build_positional_index(docs, content_col="text",
-                                      id_col="doc_id", use_pandas_udf=False)
+                                      id_col="doc_id")
     ib.write_index(pidx0, ptmp)
     ppidx = ib.read_index(spark, ptmp)
     sections.append((
@@ -138,7 +136,8 @@ def main() -> None:
         "pure Catalyst array algebra — no UDF, no corpus scan.",
         explain(pp.phrase_match(ppidx, ["table", "hash"]))))
 
-    tdp = pp.term_doc_positions(docs, content_col="text", id_col="doc_id")
+    tdp = pp.term_doc_positions_arrow(docs, content_col="text",
+                                      id_col="doc_id")
     sharded = pp.positional_postings(
         tdp, hot=tdp.select("term").distinct(), shard_factor=8)
     sections.append((
@@ -190,7 +189,7 @@ def main() -> None:
         "postings payload through phase 2 (measured 5.5 s vs 2.1 s "
         "unsalted on a 20k-doc build with nothing hot); the split runs "
         "at parity with the unsalted plan.",
-        explain(ib.postings(tf2, salt_hot_terms=True, hot=hot))))
+        explain(ib.postings(tf, salt_hot_terms=True, hot=hot))))
 
     sections.append((
         "IVF cell assignment (map-side, round 3)",
