@@ -19,10 +19,18 @@ from __future__ import annotations
 
 import argparse
 import sys
+import time
+from typing import Callable, NamedTuple, NoReturn
 
 from inverted_index_and_search_spark.operators import index_build as ib
 from inverted_index_and_search_spark.operators import query as q
 from inverted_index_and_search_spark.session import get_spark
+
+
+def _fail(msg: str) -> NoReturn:
+    """Report a usage error and exit 2 (``main`` stops its session)."""
+    print(f"error: {msg}", file=sys.stderr)
+    raise SystemExit(2)
 
 
 def _session(app_name: str):
@@ -52,36 +60,41 @@ def _looks_like_parquet(path: str) -> bool:
     return True
 
 
-def _build(args: argparse.Namespace) -> None:
-    spark, created = _session("iis-build")
-    in_fmt = args.input_format
-    if in_fmt == "auto":
-        in_fmt = ("parquet" if all(_looks_like_parquet(p) for p in args.input)
-                  else "text-dir")
-    if in_fmt == "text-dir":
-        # reference entry path: directory tree(s) of plaintext files,
-        # basename = docID (safe_read, spark/inverted_index_search.py:72-100;
-        # multiple paths union like --input-folder/--input-texts)
+def _load_docs(spark, paths: list[str], *, glob: str,
+               input_format: str = "auto", content_col: str = "content",
+               id_col: str = "doc_id"):
+    """(docs, content_col, id_col) for corpus-shaped inputs, auto-detected
+    unless ``input_format`` says: directory tree(s) of plaintext files,
+    basename = docID (safe_read, spark/inverted_index_search.py:72-100),
+    or catalog tables — Iceberg table names on a real cluster, parquet
+    paths in the sandbox. Multiple paths union like the reference's
+    --input-folder/--input-texts; a table without ``id_col`` gets the
+    engine's deterministic doc_id."""
+    if input_format == "auto":
+        input_format = ("parquet" if all(_looks_like_parquet(p) for p in paths)
+                        else "text-dir")
+    if input_format == "text-dir":
         from inverted_index_and_search_spark.sources.files import docs_from_files
-        docs = docs_from_files(spark, args.input, glob=args.glob)
-        args.content_col, args.id_col = "content", "doc_id"
-    else:
-        # catalog adapter: Iceberg table names on a real cluster,
-        # parquet paths in the sandbox — unioned across inputs
-        from functools import reduce
+        return docs_from_files(spark, paths, glob=glob), "content", "doc_id"
+    from functools import reduce
 
-        from inverted_index_and_search_spark.sources.catalog import load_documents
-        dfs = [load_documents(spark, p) for p in args.input]
-        docs = reduce(lambda a, b: a.unionByName(b), dfs)
-    if args.id_col not in docs.columns:
+    from inverted_index_and_search_spark.sources.catalog import load_documents
+    dfs = [load_documents(spark, p) for p in paths]
+    docs = reduce(lambda a, b: a.unionByName(b), dfs)
+    if id_col not in docs.columns:
         from inverted_index_and_search_spark.corpus import with_doc_id
-        docs = with_doc_id(docs)
+        docs, id_col = with_doc_id(docs), "doc_id"
+    return docs, content_col, id_col
+
+
+def _build(spark, args: argparse.Namespace) -> None:
+    docs, args.content_col, args.id_col = _load_docs(
+        spark, args.input, glob=args.glob, input_format=args.input_format,
+        content_col=args.content_col, id_col=args.id_col)
     if args.limit_mb is not None:
         docs = ib.budget_input(docs, args.limit_mb,
                                content_col=args.content_col,
                                id_col=args.id_col)
-    import time
-
     analyzer = None
     if args.stopwords or args.stem:
         from inverted_index_and_search_spark.analysis import Analyzer
@@ -96,12 +109,8 @@ def _build(args: argparse.Namespace) -> None:
     if (args.forward or args.inline_dl) and (
             args.format != "parquet" or args.field
             or (args.inline_dl and args.positional)):
-        print("error: --forward/--inline-dl need the parquet format "
-              "(non-fielded; --inline-dl also excludes --positional)",
-              file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
+        _fail("--forward/--inline-dl need the parquet format "
+              "(non-fielded; --inline-dl also excludes --positional)")
 
     t0 = time.perf_counter()
     if args.field:
@@ -110,12 +119,9 @@ def _build(args: argparse.Namespace) -> None:
         )
 
         if args.format != "parquet" or args.positional:
-            print("error: --field builds are parquet-layout only "
+            _fail("--field builds are parquet-layout only "
                   "(weighted tf is fractional — the text/json/segment "
-                  "wire formats carry integer tf)", file=sys.stderr)
-            if created:
-                spark.stop()
-            raise SystemExit(2)
+                  "wire formats carry integer tf)")
         fields: dict[str, float] = {}
         for spec in args.field:
             col, sep, w = spec.rpartition(":")
@@ -124,17 +130,10 @@ def _build(args: argparse.Namespace) -> None:
                     raise ValueError
                 fields[col] = float(w)
             except ValueError:
-                print(f"error: bad --field {spec!r} (want COL:WEIGHT)",
-                      file=sys.stderr)
-                if created:
-                    spark.stop()
-                raise SystemExit(2) from None
+                _fail(f"bad --field {spec!r} (want COL:WEIGHT)")
             if col not in docs.columns:
-                print(f"error: --field column {col!r} not in input "
-                      f"columns {docs.columns}", file=sys.stderr)
-                if created:
-                    spark.stop()
-                raise SystemExit(2)
+                _fail(f"--field column {col!r} not in input "
+                      f"columns {docs.columns}")
         idx = build_fielded_index(docs, fields, id_col=args.id_col,
                                   n_buckets=args.num_output_partitions,
                                   salt_hot_terms=True,
@@ -148,8 +147,6 @@ def _build(args: argparse.Namespace) -> None:
                                  "fields": fields})
         print(f"index written to {args.output} (parquet, BM25F fields "
               f"{fields})")
-        if created:
-            spark.stop()
         return
     if args.format == "segments":
         # north-star layout: delta+varint compressed postings with
@@ -196,8 +193,6 @@ def _build(args: argparse.Namespace) -> None:
                           wall_seconds=time.perf_counter() - t0,
                           extra={"input": args.input, "format": args.format})
         print(f"index written to {args.output} (segments)")
-        if created:
-            spark.stop()
         return
     if args.positional:
         from inverted_index_and_search_spark.operators.positional import (
@@ -241,427 +236,332 @@ def _build(args: argparse.Namespace) -> None:
                       wall_seconds=time.perf_counter() - t0,
                       extra={"input": args.input, "format": args.format})
     print(f"index written to {args.output} ({args.format})")
-    if created:
-        spark.stop()
 
 
-def _resolve_keys(index: ib.Index,
-                  doc_ids: list[int]) -> dict[int, str] | None:
+def _open_index(spark, fmt: str, path: str):
+    """The index built at ``path``: a SegmentIndex for 'segments', else
+    the DataFrame ``Index`` of a parquet, text (the reference-variant
+    ``term\\tdoc:tf`` interchange from any builder, search-query.py:75-90),
+    json or ref-parquet (either reference Parquet layout, auto-detected
+    from the schema) build."""
+    if fmt == "segments":
+        from inverted_index_and_search_spark.operators import segments as seg
+
+        return seg.read_segment_index(spark, path)
+    read = {"text": ib.read_index_text, "json": ib.read_index_json,
+            "ref-parquet": ib.read_index_parquet_ref}.get(fmt, ib.read_index)
+    return read(spark, path)
+
+
+def _resolve_keys(index, doc_ids: list[int]) -> dict[int, str] | None:
     """doc_id -> original docID (filename) for THIS RESULT's docs only,
     on indexes parsed from reference-variant text output; None when ids
-    are native. Display-time broadcast join against doc_stats — bounded
-    by the result size, never a full doc_stats collect (which at corpus
-    scale would materialize every doc row on the driver)."""
-    if "doc_key" not in index.doc_stats.columns or not doc_ids:
+    are native (always, on segments). Display-time broadcast join
+    against doc_stats — bounded by the result size, never a full
+    doc_stats collect (which at corpus scale would materialize every
+    doc row on the driver)."""
+    doc_stats = getattr(index, "doc_stats", None)
+    if doc_stats is None or "doc_key" not in doc_stats.columns \
+            or not doc_ids:
         return None
     from pyspark.sql import functions as F
 
-    spark = index.doc_stats.sparkSession
+    spark = doc_stats.sparkSession
     ids = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
-    rows = (index.doc_stats.join(F.broadcast(ids), "doc_id")
+    rows = (doc_stats.join(F.broadcast(ids), "doc_id")
             .select("doc_id", "doc_key").collect())
     return {r["doc_id"]: r["doc_key"] for r in rows}
 
 
-def _run_query(index: ib.Index, line: str, bm25: bool, topk: int,
-               phrase: bool = False, expr: bool = False,
-               prefix: bool = False, fuzzy: int | None = None,
-               meta=None, suggest: int | None = None,
-               snip: tuple | None = None,
-               complete: bool = False, rank: str | None = None,
-               prf: bool = False, synonyms: dict | None = None,
-               related: bool = False) -> bool:
-    """Evaluate one query line and print results; returns False only on
-    a malformed --expr query (one-shot callers exit nonzero on that)."""
+#: a backend's answer to one query line: (terms, line) -> rows
+Run = Callable[[list, str], list]
+
+_NO_MATCH = "No matches found."  # reference wording, search-query.py:62
+
+
+class Mode(NamedTuple):
+    """One query mode of ``search``."""
+
+    flag: str
+    selected: Callable[[argparse.Namespace], bool]
+    #: printed when the result is empty
+    empty: str = _NO_MATCH
+    #: query terms pass the build analyzer; the raw-fragment modes
+    #: match dictionary terms as typed
+    analyzed: bool = True
+    #: the first column is a doc id (``_resolve_keys`` maps it)
+    doc_ids: bool = True
+
+
+#: every query mode in precedence order: the first selected one answers
+#: each query line. A backend serves the modes its table has a
+#: callable for; selecting any other mode is a usage error.
+MODES = (
+    Mode("--mlt", lambda a: a.mlt is not None, doc_ids=False),
+    Mode("--related", lambda a: a.related, "No related terms.", False, False),
+    Mode("--complete", lambda a: a.complete, "No completions.", False, False),
+    Mode("--suggest", lambda a: a.suggest is not None, "No suggestions.",
+         False, False),
+    Mode("--snippets", lambda a: a.snippets is not None, doc_ids=False),
+    Mode("--prefix", lambda a: a.prefix, analyzed=False),
+    Mode("--fuzzy", lambda a: a.fuzzy is not None, analyzed=False),
+    # the query language parses the raw line itself
+    Mode("--expr", lambda a: a.expr, analyzed=False),
+    Mode("--phrase", lambda a: a.phrase),
+    Mode("--synonyms", lambda a: a.synonyms is not None),
+    Mode("--prf", lambda a: a.prf),
+    Mode("--rank qld", lambda a: a.rank == "qld"),
+    Mode("--rank tfidf", lambda a: a.rank == "tfidf"),
+    Mode("--bm25", lambda a: a.bm25 or a.rank == "bm25"),
+    Mode("boolean", lambda a: True),
+)
+
+
+def _pick_mode(args: argparse.Namespace, table: dict, layout: str) -> Mode:
+    """The first selected mode; exit 2 if ``table`` lacks any selected one."""
+    selected = [m for m in MODES if m.selected(args)]
+    lacking = [m.flag for m in selected if m.flag not in table]
+    if lacking:
+        positional = "" if "--phrase" in table else "non-positional "
+        _fail(f"{', '.join(lacking)} not served by a {positional}{layout}")
+    return selected[0]
+
+
+def _normalise(mode: Mode, idx, line: str) -> list[str]:
+    """The query terms of ``line`` as ``idx`` (either layout) indexed
+    them: split with the build tokenizer, then the build analyzer unless
+    ``mode`` matches raw fragments (Lucene convention: one analyzer,
+    both sides). An --expr line parses itself and stays as typed."""
     terms = line.split()
-    if not terms:
-        return True
-    if getattr(index, "tokenizer", "standard") == "code" and not expr:
-        # the index vocabulary is identifier-split (meta.json tokenizer
-        # = code): query tokens must split the same way or they miss it.
+    if mode.flag == "--expr":
+        return terms
+    if idx.tokenizer == "code":
         # "getFileName" becomes the term sequence [get, file, name] —
         # under --phrase that is exactly Lucene WDF semantics: the
-        # phrase matches getFileName AND get_file_name occurrences.
+        # phrase matches getFileName AND get_file_name occurrences
         from inverted_index_and_search_spark.tokenizer import tokenizer_py
         tok = tokenizer_py("code")
         terms = [t for raw in terms for t in tok(raw)]
-        if not terms:
-            print("No matches found.")
-            return True
-    if related:
-        # document-level PMI associations of the first token
-        rows = q.related_terms(index, terms[0], k=topk).collect()
-        if not rows:
-            print("No related terms.")
-        for r in rows:
-            print(f"{r['term']}\t{r['co_df']}\t{r['pmi']:.6f}")
-        return True
-    if complete:
-        # popularity-ranked autocomplete of the first token as a prefix
-        rows = q.complete_terms(index, terms[0], k=topk).collect()
-        if not rows:
-            print("No completions.")
-        for r in rows:
-            print(f"{r['term']}\t{r['cf']}")
-        return True
-    if suggest is not None:
-        # "did you mean": ranked dictionary terms near the first token
-        rows = q.suggest_terms(index, terms[0], max_dist=suggest,
-                               k=topk).collect()
-        if not rows:
-            print("No suggestions.")
-        for r in rows:
-            print(f"{r['term']}\t{r['dist']}\t{r['cf']}")
-        return True
-    if snip is not None:
-        from inverted_index_and_search_spark.operators.snippets import (
-            bm25_snippets,
-        )
-
-        docs, width, ccol, icol = snip
-        rows = bm25_snippets(index, docs, terms, k=topk, width=width,
-                             mark=("[", "]"), content_col=ccol,
-                             id_col=icol).collect()
-        if not rows:
-            print("No matches found.")
-        for r in rows:
-            print(f"{r['doc_id']}\t{r['score']:.6f}\t{r['snippet']}")
-        return True
-    if prefix or fuzzy is not None:
-        if prefix:
-            rows = q.prefix_docs(index, terms[0]).collect()
-        else:
-            rows = q.fuzzy_docs(index, terms[0], fuzzy).collect()
-        key_map = _resolve_keys(index, [r["doc_id"] for r in rows])
-
-        def show_d(doc_id: int) -> str:
-            return (key_map.get(doc_id, str(doc_id)) if key_map
-                    else str(doc_id))
-
-        if not rows:
-            print("No matches found.")
-        else:
-            print("\n".join(show_d(r["doc_id"]) for r in rows))
-        return True
-
-    def keyed(rows) -> dict[int, str] | None:
-        return _resolve_keys(index, [r["doc_id"] for r in rows])
-
-    key_map: dict[int, str] | None = None
-
-    def show(doc_id: int) -> str:
-        return key_map.get(doc_id, str(doc_id)) if key_map else str(doc_id)
-
-    if expr:
-        from inverted_index_and_search_spark.operators import search_expr as se
-
-        try:
-            if bm25:
-                rows = se.search_expr_ranked(index, line, k=topk,
-                                             meta=meta).collect()
-            else:
-                rows = se.search_expr(index, line, meta=meta).collect()
-        except se.ExprError as e:
-            print(f"error: {e}", file=sys.stderr)
-            return False
-        key_map = keyed(rows)
-        if not rows:
-            print("No matches found.")
-        elif bm25:
-            for r in rows:
-                print(f"{show(r['doc_id'])}\t{r['score']:.6f}")
-        else:
-            print("\n".join(show(r["doc_id"]) for r in rows))
-        return True
-    if phrase:
-        from inverted_index_and_search_spark.operators import positional as pos
-
-        if index.analyzer is not None and not index.analyzer.is_identity:
-            # analyzed positional index: positions are POST-analysis
-            # (renumbered), so the analyzed phrase matches across
-            # removed stopwords — one analyzer, both sides
-            terms = index.analyzer.analyze_terms(terms)
-            if not terms:
-                print("No matches found.")
-                return True
-        if bm25:
-            rows = pos.phrase_bm25_topk(index, terms, k=topk).collect()
-            key_map = keyed(rows)
-            if not rows:
-                print("No matches found.")
-            for r in rows:
-                print(f"{show(r['doc_id'])}\t{r['score']:.6f}")
-        else:
-            rows = pos.phrase_match(index, terms).collect()
-            key_map = keyed(rows)
-            if not rows:
-                print("No matches found.")
-            for r in rows:
-                print(f"{show(r['doc_id'])}\t{r['phrase_tf']}")
-        return True
-    if index.analyzer is not None and not index.analyzer.is_identity:
-        # the index was built with an analyzer (meta.json): query terms
-        # must pass the same stopword/stem transform to hit its
-        # vocabulary (Lucene convention: one analyzer, both sides)
-        terms = index.analyzer.analyze_terms(terms)
-        if not terms:
-            print("No matches found.")
-            return True
-    if bm25 or rank is not None or prf or synonyms is not None:
-        from inverted_index_and_search_spark.operators import ranking as rk
-
-        if synonyms is not None:
-            rows = rk.synonym_bm25_topk(index, terms, synonyms,
-                                        k=topk).collect()
-        elif prf:
-            # RM3-shape pseudo-relevance feedback (BM25 base ranker)
-            rows = rk.bm25_prf_topk(index, terms, k=topk).collect()
-        elif rank == "qld":
-            rows = rk.qld_topk(index, terms, k=topk).collect()
-        elif rank == "tfidf":
-            rows = rk.classic_tfidf_topk(index, terms, k=topk).collect()
-        else:
-            rows = q.bm25_topk(index, terms, k=topk).collect()
-        key_map = keyed(rows)
-        if not rows:
-            print("No matches found.")
-        for r in rows:
-            print(f"{show(r['doc_id'])}\t{r['score']:.6f}")
-    else:
-        rows = q.boolean_and(index, terms).collect()
-        key_map = keyed(rows)
-        if not rows:
-            # reference wording, search-query.py:62
-            print("No matches found.")
-        else:
-            print("\n".join(show(r["doc_id"]) for r in rows))
-    return True
+    if mode.analyzed and idx.analyzer is not None \
+            and not idx.analyzer.is_identity:
+        # positional builds renumber positions POST-analysis, so an
+        # analyzed phrase matches across removed stopwords
+        terms = idx.analyzer.analyze_terms(terms)
+    return terms
 
 
-def _run_query_server(server, line: str, bm25: bool, topk: int,
-                      phrase: bool, expr: bool = False,
-                      prefix: bool = False, fuzzy: int | None = None,
-                      suggest: int | None = None,
-                      snip: tuple | None = None,
-                      complete: bool = False,
-                      rank: str | None = None) -> bool:
-    """One query against a warm QueryServer (compressed segments):
-    repeat terms answer from the per-term cache in microseconds —
-    the scale-valid interactive path (no full-index residency).
-    Returns False only on a malformed --expr query."""
-    terms = line.split()
+def _print_rows(rows: list, empty: str | None = None,
+                keys: dict | None = None) -> None:
+    """One tab-separated line per row (floats ``%.6f``), ``keys`` mapping
+    the leading doc id; ``empty`` when there are no rows."""
+    if not rows and empty:
+        print(empty)
+    for row in rows:
+        cells = [f"{v:.6f}" if isinstance(v, float) else str(v) for v in row]
+        if keys:
+            cells[0] = keys.get(row[0], cells[0])
+        print("\t".join(cells))
+
+
+def _collect(df, *cols: str) -> list[tuple]:
+    return [tuple(r[c] for c in cols) for r in df.collect()]
+
+
+def _dataframe_modes(spark, args: argparse.Namespace, index) -> dict[str, Run]:
+    """Mode table of a DataFrame ``Index`` (every format but segments)."""
+    from inverted_index_and_search_spark.operators import positional as pos
+    from inverted_index_and_search_spark.operators import ranking as rk
+    from inverted_index_and_search_spark.operators import search_expr as se
+
+    # Warm only the SMALL side: doc_stats + collection stats. Caching
+    # the postings table here (round-2 behavior) forced a full scan and
+    # full-RAM materialization of the index before the first query —
+    # an OOM/minutes-long startup at corpus scale that defeated the
+    # engine's own bucket pruning. Per-query `_query_postings` prunes
+    # the parquet scan to the query's terms' buckets uncached, and the
+    # warm-latency path is QueryServer's per-term on-demand cache.
+    index.doc_stats.cache()
+    index.collection_stats()
+    k, meta = args.topk, _load_meta(spark, args)
+    syn = _load_synonyms(args.synonyms)
+
+    def ranked(topk) -> Run:
+        return lambda t, _: _collect(topk(index, t, k=k), "doc_id", "score")
+
+    table: dict[str, Run] = {
+        "--mlt": lambda t, _: _collect(q.more_like_this(
+            index, args.mlt, k_terms=10, k=k), "doc_id", "score"),
+        "--related": lambda t, _: _collect(q.related_terms(
+            index, t[0], k=k), "term", "co_df", "pmi"),
+        "--complete": lambda t, _: _collect(q.complete_terms(
+            index, t[0], k=k), "term", "cf"),
+        "--suggest": lambda t, _: _collect(q.suggest_terms(
+            index, t[0], max_dist=args.suggest, k=k), "term", "dist", "cf"),
+        "--prefix": lambda t, _: _collect(q.prefix_docs(index, t[0]),
+                                          "doc_id"),
+        "--fuzzy": lambda t, _: _collect(q.fuzzy_docs(index, t[0],
+                                                      args.fuzzy), "doc_id"),
+        "--expr": (lambda _, line: _collect(se.search_expr_ranked(
+            index, line, k=k, meta=meta), "doc_id", "score"))
+        if args.bm25 else (lambda _, line: _collect(
+            se.search_expr(index, line, meta=meta), "doc_id")),
+        "--synonyms": lambda t, _: _collect(rk.synonym_bm25_topk(
+            index, t, syn, k=k), "doc_id", "score"),
+        # RM3-shape pseudo-relevance feedback (BM25 base ranker)
+        "--prf": ranked(rk.bm25_prf_topk),
+        "--rank qld": ranked(rk.qld_topk),
+        "--rank tfidf": ranked(rk.classic_tfidf_topk),
+        "--bm25": ranked(q.bm25_topk),
+        "boolean": lambda t, _: _collect(q.boolean_and(index, t), "doc_id"),
+    }
+    post_t = index.postings.schema["postings"].dataType.elementType
+    if "positions" in post_t.fieldNames():
+        table["--phrase"] = ranked(pos.phrase_bm25_topk) if args.bm25 else (
+            lambda t, _: _collect(pos.phrase_match(index, t),
+                                  "doc_id", "phrase_tf"))
+    return table
+
+
+def _segment_modes(spark, args: argparse.Namespace, idx) -> dict[str, Run]:
+    """Mode table of a segments build, served by a warm QueryServer:
+    repeat terms answer from its per-term cache without a Spark job.
+    PRF, PMI association and more-like-this need a doc->terms profile
+    scan the server has no layout for; synonym groups are DataFrame-path
+    work for now."""
+    from inverted_index_and_search_spark.operators import segments as seg
+
+    server = seg.QueryServer(idx, meta=_load_meta(spark, args))
+    k = args.topk
+
+    def docs(ids: list[int]) -> list[tuple]:
+        return [(d,) for d in ids]
+
+    table: dict[str, Run] = {
+        "--complete": lambda t, _: seg.complete_terms(idx, t[0], k=k),
+        "--suggest": lambda t, _: server.suggest(
+            t[0], max_dist=args.suggest, k=k),
+        "--prefix": lambda t, _: docs(server.prefix_docs(t[0])),
+        "--fuzzy": lambda t, _: docs(server.fuzzy_docs(t[0], args.fuzzy)),
+        "--expr": (lambda _, line: server.search_expr_ranked(line, k=k))
+        if args.bm25 else (lambda _, line: docs(server.search_expr(line))),
+        "--rank qld": lambda t, _: server.model_topk(t, k=k, model="qld"),
+        "--rank tfidf": lambda t, _: server.model_topk(t, k=k,
+                                                       model="tfidf"),
+        "--bm25": lambda t, _: server.bm25_topk(t, k=k),
+        "boolean": lambda t, _: docs(server.boolean_and(t)),
+    }
+    if "positions_enc" in idx.segments.columns:
+        table["--phrase"] = (lambda t, _: server.phrase_topk(t, k=k)) \
+            if args.bm25 else (lambda t, _: server.phrase_match(t))
+    return table
+
+
+def _snippets(spark, args: argparse.Namespace, idx, bm25: Run) -> Run:
+    """--snippets on either layout: rank with the backend's BM25, then
+    cut each ranked doc's best window from --docs-parquet (the index
+    holds no text; only the ranked ids are fetched from it)."""
+    from inverted_index_and_search_spark.operators.snippets import (
+        snippets_for_ranked,
+    )
+
+    if args.docs_parquet is None:
+        _fail("--snippets needs --docs-parquet (the documents "
+              "table holding the original text)")
+    docs = spark.read.parquet(args.docs_parquet)
+
+    def run(terms: list[str], line: str) -> list[tuple]:
+        norm = sorted({t.lower() for t in terms})
+        rows = snippets_for_ranked(
+            docs, bm25(norm, line), norm, width=args.snippets,
+            mark=("[", "]"), content_col=args.docs_content_col,
+            id_col=args.docs_id_col, analyzer=idx.analyzer,
+            tokenizer=idx.tokenizer)
+        return _collect(rows, "doc_id", "score", "snippet")
+    return run
+
+
+def _answer(mode: Mode, run: Run, idx, line: str) -> None:
+    """Evaluate one query line with ``mode`` and print the result."""
+    if not line.split():
+        return
+    terms = _normalise(mode, idx, line)
     if not terms:
-        return True
-    if server.idx.tokenizer == "code" and not expr:
-        # code-built segment vocabulary: split query identifiers the
-        # same way (see _run_query — same Lucene-WDF phrase semantics)
-        from inverted_index_and_search_spark.tokenizer import tokenizer_py
-        tok = tokenizer_py("code")
-        terms = [t for raw in terms for t in tok(raw)]
-        if not terms:
-            print("No matches found.")
-            return True
-    if complete:
-        from inverted_index_and_search_spark.operators import segments as seg
-
-        comps = seg.complete_terms(server.idx, terms[0], k=topk)
-        if not comps:
-            print("No completions.")
-        for t, c in comps:
-            print(f"{t}\t{c}")
-        return True
-    if suggest is not None:
-        # warm "did you mean": memoized dictionary match per typo
-        sugs = server.suggest(terms[0], max_dist=suggest, k=topk)
-        if not sugs:
-            print("No suggestions.")
-        for t, d, c in sugs:
-            print(f"{t}\t{d}\t{c}")
-        return True
-    if prefix or fuzzy is not None:
-        # segment dictionary scan (memoized per server) + per-term cache
-        if prefix:
-            ids = server.prefix_docs(terms[0])
-        else:
-            ids = server.fuzzy_docs(terms[0], fuzzy)
-        if not ids:
-            print("No matches found.")
-        else:
-            print("\n".join(str(d) for d in ids))
-        return True
-    if server.idx.analyzer is not None \
-            and not server.idx.analyzer.is_identity:
-        # stats.json carried the build analyzer: same transform on the
-        # query side (raw-fragment modes — complete/suggest/prefix —
-        # already returned above, mirroring the DataFrame path);
-        # snippets below rank AND mark with the analyzed terms
-        terms = server.idx.analyzer.analyze_terms(terms)
-        if not terms:
-            print("No matches found.")
-            return True
-    if snip is not None:
-        from inverted_index_and_search_spark.operators.snippets import (
-            snippets_for_ranked,
-        )
-
-        docs, width, ccol, icol = snip
-        ranked = server.bm25_topk(terms, k=topk)
-        rows = snippets_for_ranked(docs, ranked, terms, width=width,
-                                   mark=("[", "]"), content_col=ccol,
-                                   id_col=icol,
-                                   analyzer=server.idx.analyzer,
-                                   tokenizer=getattr(server.idx, "tokenizer",
-                                                     "standard")).collect()
-        if not rows:
-            print("No matches found.")
-        for r in rows:
-            print(f"{r['doc_id']}\t{r['score']:.6f}\t{r['snippet']}")
-        return True
-    if expr:
-        from inverted_index_and_search_spark.operators.search_expr import (
-            ExprError,
-        )
-
-        try:
-            if bm25:
-                hits = server.search_expr_ranked(line, k=topk)
-                if not hits:
-                    print("No matches found.")
-                for d, s in hits:
-                    print(f"{d}\t{s:.6f}")
-            else:
-                ids = server.search_expr(line)
-                if not ids:
-                    print("No matches found.")
-                else:
-                    print("\n".join(str(d) for d in ids))
-        except ExprError as e:
-            print(f"error: {e}", file=sys.stderr)
-            return False
-        return True
-    if phrase:
-        if bm25:
-            hits = server.phrase_topk(terms, k=topk)
-            if not hits:
-                print("No matches found.")
-            for d, s in hits:
-                print(f"{d}\t{s:.6f}")
-        else:
-            rows = server.phrase_match(terms)
-            if not rows:
-                print("No matches found.")
-            for d, ptf in rows:
-                print(f"{d}\t{ptf}")
-    elif bm25 or rank is not None:
-        if rank in ("qld", "tfidf"):
-            # warm alternate models from the same per-term cursor cache
-            hits = server.model_topk(terms, k=topk, model=rank)
-        else:
-            hits = server.bm25_topk(terms, k=topk)
-        if not hits:
-            print("No matches found.")
-        for d, s in hits:
-            print(f"{d}\t{s:.6f}")
-    else:
-        ids = server.boolean_and(terms)
-        if not ids:
-            print("No matches found.")
-        else:
-            print("\n".join(str(d) for d in ids))
-    return True
+        print(_NO_MATCH)
+        return
+    rows = run(terms, line)
+    _print_rows(rows, mode.empty,
+                _resolve_keys(idx, [r[0] for r in rows]) if mode.doc_ids
+                else None)
 
 
-def _run_batch(spark, created: bool, args: argparse.Namespace) -> None:
+def _query_lines(query: str | None):
+    """The one-shot --query, or the reference REPL loop's lines
+    (search-query.py:120-131) until EOF."""
+    if query is not None:
+        yield query
+        return
+    try:
+        while True:
+            yield input("> ")
+    except EOFError:
+        return
+
+
+def _run_batch(spark, args: argparse.Namespace) -> None:
     """Offline batch evaluation: one query per line in --queries-file,
     evaluated ON EXECUTORS via the distributed batch kernels (segments
     layout required); prints `query_id \\t rank \\t doc_id \\t score`
     lines. Query ids are 0-based input line numbers; queries whose
-    terms are all absent print nothing (documented batch contract)."""
+    terms are all absent print nothing (documented batch contract).
+    Serves the conjunctive default, --bm25 and --phrase."""
     from inverted_index_and_search_spark.operators import segments as seg
 
     if args.index_format != "segments":
-        print("error: --queries-file needs --index-format segments "
-              "(build with --format segments)", file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
-    if args.expr or args.prefix or args.fuzzy is not None:
-        print("error: --queries-file evaluates term/phrase queries; "
-              "--expr/--prefix/--fuzzy are interactive/one-shot only",
-              file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
+        _fail("--queries-file needs --index-format segments "
+              "(build with --format segments)")
     idx = seg.read_segment_index(spark, args.index)
-    if args.phrase and "positions_enc" not in idx.segments.columns:
-        print("error: --phrase needs positional segments "
-              "(build with --positional)", file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
+    k = args.topk
+    table = {
+        "boolean": lambda qs: seg.batch_topk(idx, qs, k=k, conjunctive=True),
+        "--bm25": lambda qs: seg.batch_topk(idx, qs, k=k, conjunctive=False),
+    }
+    if "positions_enc" in idx.segments.columns:
+        table["--phrase"] = lambda qs: seg.batch_phrase_topk(idx, qs, k=k)
+    mode = _pick_mode(args, table,
+                      "segments index in --queries-file batch mode")
     with open(args.queries_file, encoding="utf-8") as f:
         queries = [(i, ln.split()) for i, ln in enumerate(f)
                    if ln.split()]
-    if args.phrase:
-        res = seg.batch_phrase_topk(idx, queries, k=args.topk)
-    else:
-        res = seg.batch_topk(idx, queries, k=args.topk,
-                             conjunctive=not args.bm25)
-    for r in res.orderBy("query_id", "rank").collect():
-        print(f"{r['query_id']}\t{r['rank']}\t{r['doc_id']}"
-              f"\t{r['score']:.6f}")
-    if created:
-        spark.stop()
+    _print_rows(_collect(table[mode.flag](queries).orderBy("query_id", "rank"),
+                         "query_id", "rank", "doc_id", "score"))
 
 
-def _search_segments(spark, created: bool, args: argparse.Namespace) -> None:
-    from inverted_index_and_search_spark.operators import segments as seg
+def _search(spark, args: argparse.Namespace) -> None:
+    if args.queries_file is not None:
+        _run_batch(spark, args)
+        return
+    idx = _open_index(spark, args.index_format, args.index)
+    table = (_segment_modes if args.index_format == "segments"
+             else _dataframe_modes)(spark, args, idx)
+    if args.snippets is not None:
+        table["--snippets"] = _snippets(spark, args, idx, table["--bm25"])
+    mode = _pick_mode(args, table, f"{args.index_format} index")
+    run = table[mode.flag]
+    if mode.flag == "--mlt":  # ranks against a doc id, not a query line
+        _print_rows(run([], ""), mode.empty)
+        return
+    from inverted_index_and_search_spark.operators.search_expr import (
+        ExprError,
+    )
 
-    server = seg.QueryServer(seg.read_segment_index(spark, args.index),
-                             meta=_load_meta(spark, args))
-    if args.prf or args.related or args.synonyms or args.mlt is not None:
-        # PRF expansion, PMI association and more-like-this all need a
-        # doc->terms profile scan, which the segment layout serves only
-        # via Spark — the warm server has no forward layout; synonym-
-        # group scoring over segments is DataFrame-path work for now.
-        # DataFrame formats only (parquet builds with --forward make
-        # the profile a point lookup).
-        print("error: --prf/--related/--synonyms/--mlt need a DataFrame "
-              "index format (parquet/text/json/ref-parquet)",
-              file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
-    if args.phrase and "positions_enc" not in server.idx.segments.columns:
-        print("error: --phrase needs positional segments "
-              "(build with --positional)", file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
-    snip = _snip_ctx(spark, created, args)
-    if args.query is not None:
-        ok = _run_query_server(server, args.query, args.bm25, args.topk,
-                               args.phrase, expr=args.expr,
-                               prefix=args.prefix, fuzzy=args.fuzzy,
-                               suggest=args.suggest, snip=snip,
-                               complete=args.complete, rank=args.rank)
-        if not ok:
-            if created:
-                spark.stop()
-            raise SystemExit(2)
-    else:
+    for line in _query_lines(args.query):
         try:
-            while True:
-                line = input("> ")
-                _run_query_server(server, line, args.bm25, args.topk,
-                                  args.phrase, expr=args.expr,
-                                  prefix=args.prefix, fuzzy=args.fuzzy,
-                                  suggest=args.suggest, snip=snip,
-                                  complete=args.complete, rank=args.rank)
-        except EOFError:
-            pass
-    if created:
-        spark.stop()
+            _answer(mode, run, idx, line)
+        except ExprError as e:
+            if args.query is not None:
+                # scripts must see a malformed one-shot expression fail
+                _fail(str(e))
+            print(f"error: {e}", file=sys.stderr)
 
 
 def _load_synonyms(path: str | None) -> dict[str, list[str]] | None:
@@ -691,173 +591,29 @@ def _load_meta(spark, args: argparse.Namespace):
     return spark.read.parquet(args.meta_parquet)
 
 
-def _snip_ctx(spark, created: bool,
-              args: argparse.Namespace) -> tuple | None:
-    """(docs, width, content_col, id_col) for --snippets, or None.
-    Snippets need the stored-fields side (the index holds no text), so
-    --docs-parquet is required with --snippets."""
-    if getattr(args, "snippets", None) is None:
-        return None
-    if args.docs_parquet is None:
-        print("error: --snippets needs --docs-parquet (the documents "
-              "table holding the original text)", file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
-    docs = spark.read.parquet(args.docs_parquet)
-    return (docs, args.snippets, args.docs_content_col, args.docs_id_col)
-
-
-def _print_stats(stats: dict) -> None:
-    for key in ("n_docs", "avgdl", "n_terms", "n_postings", "n_tokens"):
-        v = stats[key]
-        print(f"{key}\t{v:.6f}" if isinstance(v, float) else f"{key}\t{v}")
-    for term, cf in stats["top_terms"]:
-        print(f"top\t{term}\t{cf}")
-
-
-def _stats(args: argparse.Namespace) -> None:
+def _stats(spark, args: argparse.Namespace) -> None:
     """`stats` subcommand: corpus/index summary for any layout —
     n_docs, avgdl, term/posting/token counts and the top terms by
     collection frequency. Narrow scans only (no postings payloads)."""
-    spark, created = _session("iis-stats")
+    idx = _open_index(spark, args.index_format, args.index)
     if args.index_format == "segments":
         from inverted_index_and_search_spark.operators import segments as seg
 
-        stats = seg.segment_stats(seg.read_segment_index(spark, args.index),
-                                  top=args.top)
+        stats = seg.segment_stats(idx, top=args.top)
     else:
-        if args.index_format == "text":
-            index = ib.read_index_text(spark, args.index)
-        elif args.index_format == "json":
-            index = ib.read_index_json(spark, args.index)
-        elif args.index_format == "ref-parquet":
-            index = ib.read_index_parquet_ref(spark, args.index)
-        else:
-            index = ib.read_index(spark, args.index)
-        stats = q.index_stats(index, top=args.top)
-    _print_stats(stats)
-    if created:
-        spark.stop()
+        stats = q.index_stats(idx, top=args.top)
+    _print_rows([(key, stats[key]) for key in ("n_docs", "avgdl", "n_terms",
+                                               "n_postings", "n_tokens")]
+                + [("top", term, cf) for term, cf in stats["top_terms"]])
 
 
-def _search(args: argparse.Namespace) -> None:
-    spark, created = _session("iis-search")
-    if args.queries_file is not None:
-        _run_batch(spark, created, args)
-        return
-    if args.index_format == "segments":
-        # north-star compressed layout -> warm QueryServer (per-term
-        # on-demand cache; never materializes the index)
-        _search_segments(spark, created, args)
-        return
-    if args.index_format == "text":
-        # reference-variant interchange: consume a `term\tdoc:tf...`
-        # text index from any builder (search-query.py:75-90 parity)
-        index = ib.read_index_text(spark, args.index)
-    elif args.index_format == "json":
-        index = ib.read_index_json(spark, args.index)
-    elif args.index_format == "ref-parquet":
-        # either reference Parquet layout, auto-detected from schema
-        index = ib.read_index_parquet_ref(spark, args.index)
-    else:
-        index = ib.read_index(spark, args.index)
-    # Warm only the SMALL side: doc_stats + collection stats. Caching
-    # the postings table here (round-2 behavior) forced a full scan and
-    # full-RAM materialization of the index before the first query —
-    # an OOM/minutes-long startup at corpus scale that defeated the
-    # engine's own bucket pruning. Per-query `_query_postings` prunes
-    # the parquet scan to the query's terms' buckets uncached, and the
-    # warm-latency path is QueryServer's per-term on-demand cache.
-    index.doc_stats.cache()
-    index.collection_stats()
-    if args.phrase:
-        post_t = index.postings.schema["postings"].dataType.elementType
-        if "positions" not in post_t.fieldNames():
-            print("error: --phrase needs a positional index "
-                  "(build with --positional)", file=sys.stderr)
-            if created:
-                spark.stop()
-            raise SystemExit(2)
-    meta = _load_meta(spark, args)
-    snip = _snip_ctx(spark, created, args)
-    if args.mlt is not None:
-        rows = q.more_like_this(index, args.mlt, k_terms=10,
-                                k=args.topk).collect()
-        if not rows:
-            print("No matches found.")
-        for r in rows:
-            print(f"{r['doc_id']}\t{r['score']:.6f}")
-        if created:
-            spark.stop()
-        return
-    if args.query is not None:
-        ok = _run_query(index, args.query, args.bm25, args.topk,
-                        phrase=args.phrase, expr=args.expr,
-                        prefix=args.prefix, fuzzy=args.fuzzy, meta=meta,
-                        suggest=args.suggest, snip=snip,
-                        complete=args.complete, rank=args.rank,
-                        prf=args.prf,
-                        synonyms=_load_synonyms(args.synonyms),
-                        related=args.related)
-        if not ok:
-            # scripts must see malformed one-shot expressions fail
-            if created:
-                spark.stop()
-            raise SystemExit(2)
-    else:
-        # reference REPL loop, search-query.py:120-131 (parse errors
-        # print and the loop continues — interactive semantics)
-        syn_map = _load_synonyms(args.synonyms)
-        try:
-            while True:
-                line = input("> ")
-                _run_query(index, line, args.bm25, args.topk,
-                           phrase=args.phrase, expr=args.expr,
-                           prefix=args.prefix, fuzzy=args.fuzzy,
-                           meta=meta, suggest=args.suggest, snip=snip,
-                           complete=args.complete, rank=args.rank,
-                           prf=args.prf, synonyms=syn_map,
-                           related=args.related)
-        except EOFError:
-            pass
-    if created:
-        spark.stop()
-
-
-def _load_docs_arg(spark, paths: list[str], glob: str):
-    """Shared input loader for corpus-shaped positional inputs: parquet
-    dataset(s) or raw text dirs, auto-detected (same rules as build)."""
-    if all(_looks_like_parquet(p) for p in paths):
-        from functools import reduce
-
-        from inverted_index_and_search_spark.sources.catalog import (
-            load_documents,
-        )
-        dfs = [load_documents(spark, p) for p in paths]
-        docs, content_col = reduce(lambda a, b: a.unionByName(b), dfs), None
-    else:
-        from inverted_index_and_search_spark.sources.files import (
-            docs_from_files,
-        )
-        docs, content_col = docs_from_files(spark, paths, glob=glob), "content"
-    return docs, content_col
-
-
-def _grep_build(args: argparse.Namespace) -> None:
+def _grep_build(spark, args: argparse.Namespace) -> None:
     """`grep-build`: persist the trigram substring/regex index."""
     from inverted_index_and_search_spark.operators import grep
 
-    spark, created = _session("iis-grep-build")
-    import time
-
-    docs, auto_content = _load_docs_arg(spark, args.input, args.glob)
-    content_col = auto_content or args.content_col
-    id_col = "doc_id" if auto_content else args.id_col
-    if id_col not in docs.columns:
-        from inverted_index_and_search_spark.corpus import with_doc_id
-        docs = with_doc_id(docs)
-        id_col = "doc_id"
+    docs, content_col, id_col = _load_docs(
+        spark, args.input, glob=args.glob, content_col=args.content_col,
+        id_col=args.id_col)
     t0 = time.perf_counter()
     build = (grep.build_trigram_segments if args.compressed
              else grep.build_trigram_index)
@@ -870,25 +626,19 @@ def _grep_build(args: argparse.Namespace) -> None:
           f"case_insensitive={args.ignore_case}, "
           f"compressed={args.compressed}) "
           f"in {time.perf_counter() - t0:.2f}s")
-    if created:
-        spark.stop()
 
 
-def _grep(args: argparse.Namespace) -> None:
+def _grep(spark, args: argparse.Namespace) -> None:
     """`grep`: substring/regex search via the trigram index."""
     from inverted_index_and_search_spark.operators import grep
 
-    spark, created = _session("iis-grep")
     tidx = grep.read_trigram_index(spark, args.index)
     if args.ignore_case and not tidx.case_insensitive:
-        print("error: --ignore-case needs an index built with "
-              "grep-build --ignore-case", file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
-    docs, auto_content = _load_docs_arg(spark, args.docs, args.glob)
-    content_col = auto_content or args.content_col
-    id_col = "doc_id" if auto_content else args.id_col
+        _fail("--ignore-case needs an index built with "
+              "grep-build --ignore-case")
+    docs, content_col, id_col = _load_docs(
+        spark, args.docs, glob=args.glob, content_col=args.content_col,
+        id_col=args.id_col)
     kw = dict(content_col=content_col, id_col=id_col,
               max_grams=args.max_grams)
     if args.pattern is None:
@@ -919,8 +669,6 @@ def _grep(args: argparse.Namespace) -> None:
                     print("No matches found.")
         except EOFError:
             pass
-        if created:
-            spark.stop()
         return
     if args.regex:
         # --ignore-case folds the match via an embedded (?i) flag; the
@@ -948,43 +696,29 @@ def _grep(args: argparse.Namespace) -> None:
                   else r["doc_id"])
     if not rows:
         print("No matches found.")
-    if created:
-        spark.stop()
 
 
-def _symbols_build(args: argparse.Namespace) -> None:
+def _symbols_build(spark, args: argparse.Namespace) -> None:
     """`symbols-build`: extract a ctags-style definition index."""
     from inverted_index_and_search_spark.operators import symbols as sy
 
-    spark, created = _session("iis-symbols-build")
-    docs, auto_content = _load_docs_arg(spark, args.input, "*")
-    content_col = auto_content or args.content_col
+    docs, content_col, id_col = _load_docs(
+        spark, args.input, glob="*", content_col=args.content_col,
+        id_col=args.id_col)
     if args.lang_col not in docs.columns:
-        print(f"error: --lang-col {args.lang_col!r} not in input columns "
-              f"{docs.columns} (symbol patterns are per-language)",
-              file=sys.stderr)
-        if created:
-            spark.stop()
-        raise SystemExit(2)
-    id_col = "doc_id" if auto_content else args.id_col
-    if id_col not in docs.columns:
-        from inverted_index_and_search_spark.corpus import with_doc_id
-        docs = with_doc_id(docs)
-        id_col = "doc_id"
+        _fail(f"--lang-col {args.lang_col!r} not in input columns "
+              f"{docs.columns} (symbol patterns are per-language)")
     syms = sy.extract_symbols(docs, content_col=content_col, id_col=id_col,
                               lang_col=args.lang_col)
     sy.write_symbol_index(syms, args.output,
                           n_buckets=args.num_output_partitions)
     print(f"symbol index written to {args.output}")
-    if created:
-        spark.stop()
 
 
-def _symbols(args: argparse.Namespace) -> None:
+def _symbols(spark, args: argparse.Namespace) -> None:
     """`symbols`: definition lookup over a symbols-build index."""
     from inverted_index_and_search_spark.operators import symbols as sy
 
-    spark, created = _session("iis-symbols")
     back, nb = sy.read_symbol_index(spark, args.index)
     if args.prefix:
         rows = sy.symbol_search(back, args.name, kind=args.kind,
@@ -999,8 +733,6 @@ def _symbols(args: argparse.Namespace) -> None:
               f"\t{r['lang']}")
     if not rows:
         print("No definitions found.")
-    if created:
-        spark.stop()
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -1265,7 +997,12 @@ def main(argv: list[str] | None = None) -> None:
     st.set_defaults(fn=_stats)
 
     args = ap.parse_args(argv)
-    args.fn(args)
+    spark, created = _session(f"iis-{args.cmd}")
+    try:
+        args.fn(spark, args)
+    finally:
+        if created:
+            spark.stop()
 
 
 if __name__ == "__main__":
