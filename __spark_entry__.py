@@ -196,23 +196,13 @@ def _q_bm25_multi_rare(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit("rare").alias("part"), "doc_id", "score")))
 
 
-def _coll_stats(docs: DataFrame, tf: DataFrame) -> tuple[int, float]:
-    """(n_docs, avgdl) — docs with zero tokens still count toward both."""
-    n_docs = docs.count()
-    avgdl = float(
-        tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        .join(docs.select("doc_id"), "doc_id", "right").fillna({"dl": 0})
-        .agg(F.avg("dl")).collect()[0][0] or 0.0)
-    return n_docs, avgdl
-
-
 def _tf_segment_index(spark: SparkSession, sf_dir: str, *,
                       all_hot: bool = False) -> seg.SegmentIndex:
     """Compressed tf-only segment index over the documents table.
     ``all_hot=True`` forces EVERY term through the sharded layout."""
     docs = _docs(spark, sf_dir)
     tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
-    n_docs, avgdl = _coll_stats(docs, tf)
+    n_docs, avgdl = ib.corpus_stats(docs, tf)
     hot = (tf.select("term").distinct() if all_hot
            else ib.hot_terms_from_docs(docs, content_col="text"))
     return seg.build_segment_index(tf, n_docs, avgdl, hot=hot)
@@ -299,7 +289,7 @@ def _q_bm25_segment_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     for par in (0, 1):
         part = docs.where(F.pmod("doc_id", F.lit(2)) == par)
         ptf = ib.term_doc_tf_arrow(part, content_col="text", id_col="doc_id")
-        nd, ad = _coll_stats(part, ptf)
+        nd, ad = ib.corpus_stats(part, ptf)
         halves.append(seg.build_segment_index(ptf, nd, ad))
     add("merged", seg.topk(seg.merge_segment_indexes(halves), Q_BM25, k=10))
 
@@ -450,11 +440,7 @@ def _pos_segment_index(spark: SparkSession, sf_dir: str) -> seg.SegmentIndex:
     docs = _docs(spark, sf_dir)
     tdp = pos.term_doc_positions_arrow(docs, content_col="text",
                                        id_col="doc_id")
-    n_docs = docs.count()
-    avgdl = float(
-        tdp.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        .join(docs.select("doc_id"), "doc_id", "right").fillna({"dl": 0})
-        .agg(F.avg("dl")).collect()[0][0])
+    n_docs, avgdl = ib.corpus_stats(docs, tdp)
     return seg.build_segment_index(
         tdp, n_docs, avgdl, hot=ib.hot_terms_from_docs(docs, content_col="text"))
 
@@ -528,11 +514,7 @@ def _q_batch_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-verified, not just pytest'd."""
     docs = _docs(spark, sf_dir)
     tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
-    n_docs = docs.count()
-    avgdl = float(
-        tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        .join(docs.select("doc_id"), "doc_id", "right").fillna({"dl": 0})
-        .agg(F.avg("dl")).collect()[0][0])
+    n_docs, avgdl = ib.corpus_stats(docs, tf)
     sidx = seg.build_segment_index(
         tf, n_docs, avgdl, hot=ib.hot_terms_from_docs(docs, content_col="text"))
     res = seg.batch_topk(sidx, BATCH_QUERIES, k=10)

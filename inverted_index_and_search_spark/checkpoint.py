@@ -7,7 +7,7 @@ aid is the output-dir auto-versioning, ``choose_output_path``,
 
 Layout under ``out_dir``:
 
-    stage/tf_dl/term_bucket=B/...   materialized (term, doc_id, tf, dl)
+    stage/tf_dl/term_bucket=B/...   the tf kernel's (term, doc_id, tf, dl)
     doc_stats/...                   (doc_id, dl, content_sha256)
     segments/term_bucket=B/...      compressed segments (segments.py)
     stats.json                      {n_docs, avgdl, n_buckets, block, tokenizer}
@@ -91,22 +91,22 @@ def build_resumable(
     run_t0 = time.perf_counter()
     os.makedirs(os.path.join(out_dir, "_manifest"), exist_ok=True)
 
-    # ---- stage 0: tokenize + tf + dl, bucketed materialization
+    # ---- stage 0: the tf kernel's rows (dl included), bucketed
     if not _committed(out_dir, "stage0"):
         t0 = time.perf_counter()
         tf = ib.term_doc_tf_arrow(docs, content_col=content_col,
                                   id_col=id_col, tokenizer=tokenizer)
-        tf_dl = seg.tf_with_dl(tf).withColumn(
-            "term_bucket", ib.term_bucket_col(F.col("term"), n_buckets)
-        )
         # one bucket per write task via the Murmur3 routing column
         # (hash partitioning leaves ~1/e of tasks empty; range would
         # sample-execute the tokenize+tf pipeline twice)
         route = ib.bucket_route_col(spark, F.col("term_bucket"), n_buckets)
-        (tf_dl.repartition(n_buckets, route)
+        (tf.withColumn("term_bucket", ib.term_bucket_col(F.col("term"), n_buckets))
+         .repartition(n_buckets, route)
          .write.mode("overwrite").partitionBy("term_bucket")
          .parquet(f"{out_dir}/stage/tf_dl"))
-        ds = ib.doc_stats(docs, tf, content_col=content_col, id_col=id_col)
+        # doc lengths from the materialized rows: no second tokenize
+        ds = ib.doc_stats(docs, spark.read.parquet(f"{out_dir}/stage/tf_dl"),
+                          content_col=content_col, id_col=id_col)
         ds.write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
         srow = spark.read.parquet(f"{out_dir}/doc_stats").agg(
             F.count("*").alias("n"), F.avg("dl").alias("avgdl")

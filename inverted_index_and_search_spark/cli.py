@@ -152,32 +152,17 @@ def _build(spark, args: argparse.Namespace) -> None:
         # north-star layout: delta+varint compressed postings with
         # block-max metadata (positional iff --positional), queryable
         # warm via `search --index-format segments` (QueryServer)
-        from pyspark.sql import functions as F
-
+        from inverted_index_and_search_spark.operators import positional as pos
         from inverted_index_and_search_spark.operators import segments as seg
 
-        if args.positional:
-            from inverted_index_and_search_spark.operators.positional import (
-                term_doc_positions_arrow,
-            )
-            tf = term_doc_positions_arrow(docs, content_col=args.content_col,
-                                          id_col=args.id_col,
-                                          tokenizer=args.tokenizer,
-                                          analyzer=analyzer)
-        else:
-            tf = ib.term_doc_tf_arrow(docs, content_col=args.content_col,
-                                      id_col=args.id_col,
-                                      tokenizer=args.tokenizer,
-                                      analyzer=analyzer)
-        # persist BEFORE the stats collect: the avgdl aggregation and
-        # the encode job otherwise each run the whole tokenize pipeline
+        kernel = (pos.term_doc_positions_arrow if args.positional
+                  else ib.term_doc_tf_arrow)
+        tf = kernel(docs, content_col=args.content_col, id_col=args.id_col,
+                    tokenizer=args.tokenizer, analyzer=analyzer)
+        # persist BEFORE the stats collect: the avgdl sum and the
+        # encode job otherwise each run the whole tokenize pipeline
         tf = tf.persist()
-        n_docs = docs.count()
-        avgdl = float(
-            tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-            .join(docs.select(F.col(args.id_col).alias("doc_id")),
-                  "doc_id", "right").fillna({"dl": 0})
-            .agg(F.avg("dl")).collect()[0][0] or 0.0)
+        n_docs, avgdl = ib.corpus_stats(docs, tf)
         sidx = seg.build_segment_index(
             tf, n_docs, avgdl,
             n_buckets=args.num_output_partitions,
@@ -511,9 +496,10 @@ def _run_batch(spark, args: argparse.Namespace) -> None:
     """Offline batch evaluation: one query per line in --queries-file,
     evaluated ON EXECUTORS via the distributed batch kernels (segments
     layout required); prints `query_id \\t rank \\t doc_id \\t score`
-    lines. Query ids are 0-based input line numbers; queries whose
-    terms are all absent print nothing (documented batch contract).
-    Serves the conjunctive default, --bm25 and --phrase."""
+    lines. Lines are normalised like one-shot queries; query ids are
+    0-based input line numbers; lines with no (present) terms print
+    nothing (documented batch contract). Serves the conjunctive default,
+    --bm25 and --phrase."""
     from inverted_index_and_search_spark.operators import segments as seg
 
     if args.index_format != "segments":
@@ -530,8 +516,8 @@ def _run_batch(spark, args: argparse.Namespace) -> None:
     mode = _pick_mode(args, table,
                       "segments index in --queries-file batch mode")
     with open(args.queries_file, encoding="utf-8") as f:
-        queries = [(i, ln.split()) for i, ln in enumerate(f)
-                   if ln.split()]
+        queries = [(i, terms) for i, ln in enumerate(f)
+                   if (terms := _normalise(mode, idx, ln))]
     _print_rows(_collect(table[mode.flag](queries).orderBy("query_id", "rank"),
                          "query_id", "rank", "doc_id", "score"))
 

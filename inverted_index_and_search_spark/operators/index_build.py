@@ -97,8 +97,9 @@ _ROUTE_CACHE: dict = {}
 def tokens(docs: DataFrame, *, content_col: str = "content",
            id_col: str = "doc_id", analyzer=None,
            tokenizer: str = "standard") -> DataFrame:
-    """(doc_id, term) — one row per token occurrence, from the JVM
-    expression tokenizer (whole-stage codegen, no Python worker).
+    """(doc_id, dl, term) — one row per token occurrence (dl: the doc's
+    token count), from the JVM expression tokenizer (whole-stage
+    codegen, no Python worker).
     ``analyzer`` (analysis.Analyzer) applies stopword/stem token
     filters as pure Catalyst array expressions — identity by default.
     ``tokenizer`` selects term semantics: ``"standard"`` (reference
@@ -107,22 +108,38 @@ def tokens(docs: DataFrame, *, content_col: str = "content",
     tok = tokenizer_col(tokenizer)(F.col(content_col))
     if analyzer is not None and not analyzer.is_identity:
         tok = analyzer.analyze_tokens_col(tok)
-    return docs.select(F.col(id_col).alias("doc_id"), F.explode(tok).alias("term"))
+    return _explode_bound(docs.select(F.col(id_col).alias("doc_id"),
+                                      tok.alias("_toks")),
+                          F.explode_outer, "term")
+
+
+def _explode_bound(bound: DataFrame, outer_gen, *names: str) -> DataFrame:
+    """(doc_id, dl = size(_toks), *names) from ``outer_gen`` over the
+    bound token array. A plain explode of it would make Catalyst infer
+    ``size(_toks) > 0`` and push that filter below the binding Project,
+    re-running the tokenizer per doc; an outer generator infers nothing,
+    and the null row it emits for an empty doc is dropped here."""
+    return (bound.select("doc_id", F.size("_toks").alias("dl"),
+                         outer_gen("_toks").alias(*names))
+            .where(F.col(names[-1]).isNotNull()))
 
 
 def term_doc_tf(tok: DataFrame) -> DataFrame:
-    """(term, doc_id, tf) — Catalyst emits partial+final HashAggregate,
-    which IS the reference's in-mapper-combining, for free."""
-    return tok.groupBy("term", "doc_id").agg(F.count("*").cast("int").alias("tf"))
+    """(term, doc_id, tf, dl) — Catalyst emits partial+final HashAggregate,
+    which IS the reference's in-mapper-combining, for free (dl is fixed
+    by doc_id, so it rides the key)."""
+    return tok.groupBy("term", "doc_id", "dl").agg(
+        F.count("*").cast("int").alias("tf")).select("term", "doc_id", "tf", "dl")
 
 
 def term_doc_tf_arrow(docs: DataFrame, *, content_col: str = "content",
                       id_col: str = "doc_id", analyzer=None,
                       tokenizer: str = "standard") -> DataFrame:
-    """(term, doc_id, tf) — THE tf entry point of every builder: one
+    """(term, doc_id, tf, dl) — THE tf entry point of every builder: one
     kernel per tokenizer, chosen by measurement (tokenizer.py module
     docstring). The name predates that choice and stays because the
-    frozen bench scripts call and trace it.
+    frozen bench scripts call and trace it. ``dl``, the doc's analyzed
+    token count, spares consumers a doc_id-keyed exchange.
 
     ``tokenizer="standard"`` counts tf *inside* an Arrow batch loop —
     in-mapper combining (the reference's
@@ -139,32 +156,54 @@ def term_doc_tf_arrow(docs: DataFrame, *, content_col: str = "content",
         return term_doc_tf(tokens(docs, content_col=content_col,
                                   id_col=id_col, analyzer=analyzer,
                                   tokenizer=tokenizer))
+    return _arrow_kernel(docs, content_col, id_col, analyzer)
+
+
+def _arrow_kernel(docs: DataFrame, content_col: str, id_col: str, analyzer,
+                 *, positions: bool = False) -> DataFrame:
+    """The Arrow in-mapper loop of both standard-tokenizer entry points:
+    (term, doc_id, tf[, positions], dl), positions being each term's
+    0-based offsets (positional.term_doc_positions_arrow)."""
     import pandas as pd
 
     analyze = (None if analyzer is None or analyzer.is_identity
                else analyzer.analyze_py)
 
-    def count_tf(batches):
+    def kernel(batches):
         from collections import Counter
         for pdf in batches:
             # tokenize_batch: ASCII translate+split fast path (~1.75x
             # the regex), null-safe (zero terms, matching the JVM
             # twin's explode(null) row drop)
             toks = tokenize_batch(pdf[content_col])
-            ids, terms, tfs = [], [], []
+            ids, terms, tfs, poss, dls = [], [], [], [], []
             for doc_id, words in zip(pdf[id_col], toks):
-                c = Counter(words if analyze is None else analyze(words))
+                if analyze is not None:
+                    words = analyze(words)
+                if positions:
+                    c: dict[str, list[int]] = {}
+                    for i, w in enumerate(words):
+                        c.setdefault(w, []).append(i)
+                    poss.extend(c.values())
+                    tfs.extend(len(v) for v in c.values())
+                else:
+                    c = Counter(words)
+                    tfs.extend(c.values())
                 ids.extend([doc_id] * len(c))
                 terms.extend(c.keys())
-                tfs.extend(c.values())
-            yield pd.DataFrame({
-                "term": pd.Series(terms, dtype="object"),
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "tf": pd.Series(tfs, dtype="int32"),
-            })
+                dls.extend([len(words)] * len(c))
+            out = {"term": pd.Series(terms, dtype="object"),
+                   "doc_id": pd.Series(ids, dtype="int64"),
+                   "tf": pd.Series(tfs, dtype="int32")}
+            if positions:
+                out["positions"] = pd.Series(poss, dtype="object")
+            out["dl"] = pd.Series(dls, dtype="int32")
+            yield pd.DataFrame(out)
 
+    schema = ("term string, doc_id long, tf int, "
+              + ("positions array<int>, " if positions else "") + "dl int")
     return docs.select(F.col(id_col).alias(id_col), content_col).mapInPandas(
-        count_tf, schema="term string, doc_id long, tf int")
+        kernel, schema=schema)
 
 
 def doc_stats(docs: DataFrame, tf: DataFrame, *, content_col: str = "content",
@@ -181,6 +220,15 @@ def doc_stats(docs: DataFrame, tf: DataFrame, *, content_col: str = "content",
     )
     # dl join is on doc_id; both sides already small (2-3 cols)
     return sha.join(dl, "doc_id", "left").fillna({"dl": 0})
+
+
+def corpus_stats(docs: DataFrame, tf: DataFrame) -> tuple[int, float]:
+    """(N, avgdl) with no doc-keyed exchange: avgdl = sum(tf) / N, where
+    N = ``docs.count()`` counts zero-token docs too — bit-equal to avg
+    over zero-filled per-doc lengths (the same exact sum over N)."""
+    n_docs = docs.count()
+    total = tf.agg(F.sum("tf")).collect()[0][0] or 0
+    return n_docs, (total / n_docs if n_docs else 0.0)
 
 
 def hot_terms(tf: DataFrame, *, hot_df: int = DEFAULT_HOT_DF,
@@ -236,8 +284,12 @@ def salt_col(hot_flag: F.Column, salt_factor: int) -> F.Column:
 def postings(tf: DataFrame, *, n_buckets: int = DEFAULT_BUCKETS,
              salt_hot_terms: bool = False, hot_df: int = DEFAULT_HOT_DF,
              salt_factor: int = 16, hot_sample_mod: int = 100,
-             hot: DataFrame | None = None) -> DataFrame:
+             hot: DataFrame | None = None,
+             inline_dl: bool = False) -> DataFrame:
     """(term, term_bucket, df, cf, postings: array<struct<doc_id,tf>>).
+
+    ``inline_dl=True`` adds tf's ``dl`` to the struct (inline-dl layout):
+    scorers then skip the doc_stats broadcast (query._explode_postings).
 
     Postings sorted by doc_id asc (required for delta encoding and for
     deterministic output regardless of partitioning — SURVEY.md §7).
@@ -261,14 +313,9 @@ def postings(tf: DataFrame, *, n_buckets: int = DEFAULT_BUCKETS,
     answer to the reference's IMC flush threshold
     (TokenizerMapperStateful.java:14).
     """
-    # a tf relation carrying a pre-joined dl column (inline-dl layout,
-    # build_index(inline_dl=True)) folds it into the posting struct:
-    # scorers then read dl off the posting row and skip the corpus-
-    # sized doc_stats broadcast entirely (query._explode_postings)
-    if "dl" in tf.columns:
-        post = F.struct(F.col("doc_id"), F.col("tf"), F.col("dl"))
-    else:
-        post = F.struct(F.col("doc_id"), F.col("tf"))
+    post = F.struct(F.col("doc_id"), F.col("tf"),
+                    *([F.col("dl").cast("long").alias("dl")] if inline_dl
+                      else []))
     if salt_hot_terms:
         # prefer a caller-supplied hot set (hot_terms_from_docs — see
         # its docstring for why detecting from the shared/cached tf
@@ -331,7 +378,7 @@ class Index:
 
     postings: DataFrame  # term, term_bucket, df, cf, postings
     doc_stats: DataFrame  # doc_id, dl, content_sha256
-    tf: DataFrame | None = None  # (term, doc_id, tf) — shared upstream stage
+    tf: DataFrame | None = None  # (term, doc_id, tf[, dl]) — shared upstream stage
     n_buckets: int = DEFAULT_BUCKETS
     sharded: bool = False
     #: optional SORTED (term, term_bucket) side table (persisted layouts
@@ -378,14 +425,12 @@ def build_index(docs: DataFrame, *, content_col: str = "content",
     selectable, and the keyword stays only because the frozen bench
     script still passes it.
 
-    ``inline_dl=True`` pre-joins each doc's length onto its posting
-    rows so every struct carries (doc_id, tf, dl) — scorers then skip
-    the doc_stats broadcast (the DataFrame path's documented scale
-    limitation, query.py:18-20; the segment layout already stores dl
-    per posting). Build cost: one doc_id-keyed aggregation + join of
-    the tf relation (its exchange is reused between the dl agg and the
-    join side — both partition on doc_id); default off because the
-    broadcast is cheaper at test scale.
+    ``inline_dl=True`` folds each doc's length into its posting
+    structs, (doc_id, tf, dl) — scorers then skip the doc_stats
+    broadcast (the DataFrame path's documented scale limitation,
+    query.py:18-20). dl rides the tf kernel's rows, so the build costs
+    what the plain one does; default off because the broadcast is
+    cheaper at test scale.
     """
     tf = term_doc_tf_arrow(docs, content_col=content_col, id_col=id_col,
                            analyzer=analyzer, tokenizer=tokenizer)
@@ -394,13 +439,10 @@ def build_index(docs: DataFrame, *, content_col: str = "content",
         hot = hot_terms_from_docs(docs, content_col=content_col,
                                   id_col=id_col, tokenizer=tokenizer,
                                   analyzer=analyzer)
-    ptf = tf
-    if inline_dl:
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-        ptf = tf.join(dl, "doc_id")
     return Index(
-        postings=postings(ptf, n_buckets=n_buckets,
-                          salt_hot_terms=salt_hot_terms, hot=hot),
+        postings=postings(tf, n_buckets=n_buckets,
+                          salt_hot_terms=salt_hot_terms, hot=hot,
+                          inline_dl=inline_dl),
         doc_stats=doc_stats(docs, tf, content_col=content_col, id_col=id_col),
         tf=tf,
         n_buckets=n_buckets,

@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 from inverted_index_and_search_spark.operators.index_build import (
     DEFAULT_BUCKETS,
     Index,
+    _arrow_kernel,
+    _explode_bound,
     doc_stats,
     term_bucket_col,
 )
@@ -69,11 +71,12 @@ def term_doc_positions(docs: DataFrame, *, content_col: str = "content",
                        id_col: str = "doc_id",
                        tokenizer: str = "standard",
                        analyzer=None) -> DataFrame:
-    """(term, doc_id, tf, positions) — pure-JVM path.
+    """(term, doc_id, tf, positions, dl) — pure-JVM path.
 
     posexplode assigns each token its 0-based offset; the group-by
     collects offsets per (term, doc). sort_array gives canonical
-    ascending position order regardless of partitioning.
+    ascending position order regardless of partitioning; dl (fixed by
+    doc_id) rides the grouping key.
     ``tokenizer`` selects term semantics ("standard" | "code");
     ``analyzer`` applies stopword/stem filters BEFORE offset
     assignment, so positions are POST-analysis (renumbered, the
@@ -85,24 +88,23 @@ def term_doc_positions(docs: DataFrame, *, content_col: str = "content",
     arr = tokenizer_col(tokenizer)(F.col(content_col))
     if analyzer is not None and not analyzer.is_identity:
         arr = analyzer.analyze_tokens_col(arr)
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(arr).alias("pos", "term"),
-    )
-    return tok.groupBy("term", "doc_id").agg(
+    tok = _explode_bound(docs.select(F.col(id_col).alias("doc_id"),
+                                     arr.alias("_toks")),
+                         F.posexplode_outer, "pos", "term")
+    return tok.groupBy("term", "doc_id", "dl").agg(
         F.count("*").cast("int").alias("tf"),
         F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias("positions"),
-    )
+    ).select("term", "doc_id", "tf", "positions", "dl")
 
 
 def term_doc_positions_arrow(docs: DataFrame, *, content_col: str = "content",
                              id_col: str = "doc_id",
                              tokenizer: str = "standard",
                              analyzer=None) -> DataFrame:
-    """(term, doc_id, tf, positions) — THE positions entry point of
+    """(term, doc_id, tf, positions, dl) — THE positions entry point of
     every builder, one kernel per tokenizer (the positional analogue of
     index_build.term_doc_tf_arrow; the name stays because the frozen
-    bench script calls it).
+    bench script calls it). ``dl`` is the doc's analyzed token count.
 
     ``tokenizer="standard"`` collects positions inside an Arrow batch
     loop — in-mapper combining with positions: no JVM token explode, no
@@ -114,38 +116,7 @@ def term_doc_positions_arrow(docs: DataFrame, *, content_col: str = "content",
         return term_doc_positions(docs, content_col=content_col,
                                   id_col=id_col, tokenizer=tokenizer,
                                   analyzer=analyzer)
-    import pandas as pd
-
-    from inverted_index_and_search_spark.tokenizer import tokenize_batch
-
-    analyze = (None if analyzer is None or analyzer.is_identity
-               else analyzer.analyze_py)
-
-    def collect_pos(batches):
-        for pdf in batches:
-            # tokenize_batch: ASCII fast path, null-safe (zero terms,
-            # matching the JVM twin's explode(null) drop)
-            toks = tokenize_batch(pdf[content_col])
-            if analyze is not None:
-                toks = [analyze(ws) for ws in toks]
-            ids, terms, tfs, poss = [], [], [], []
-            for doc_id, words in zip(pdf[id_col], toks):
-                d: dict[str, list[int]] = {}
-                for i, w in enumerate(words):
-                    d.setdefault(w, []).append(i)
-                ids.extend([doc_id] * len(d))
-                terms.extend(d.keys())
-                tfs.extend(len(v) for v in d.values())
-                poss.extend(d.values())
-            yield pd.DataFrame({
-                "term": pd.Series(terms, dtype="object"),
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "tf": pd.Series(tfs, dtype="int32"),
-                "positions": pd.Series(poss, dtype="object"),
-            })
-
-    return docs.select(F.col(id_col).alias(id_col), content_col).mapInPandas(
-        collect_pos, schema="term string, doc_id long, tf int, positions array<int>")
+    return _arrow_kernel(docs, content_col, id_col, analyzer, positions=True)
 
 
 def positional_postings(tdp: DataFrame, *,

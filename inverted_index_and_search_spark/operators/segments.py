@@ -62,28 +62,16 @@ SEGMENT_SCHEMA = (
 )
 
 
-def tf_with_dl(tf: DataFrame) -> DataFrame:
-    """(term, doc_id, tf, dl) — attach per-doc length to every posting.
-
-    dl comes from the same tf pass (sum of tfs per doc), then joins back
-    on doc_id. One shuffle each side; AQE picks the join strategy (the
-    dl side is |docs| rows — broadcast at test scale, shuffle join at
-    10^12 where both sides are huge but co-partitioned by doc_id).
-    """
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-    return tf.join(dl, "doc_id")
-
-
 def grouped_postings_arrays(
-    tf_dl: DataFrame, *, salt_hot_terms: bool = True, salt_factor: int = 16,
+    tf: DataFrame, *, salt_hot_terms: bool = True, salt_factor: int = 16,
     hot_df: int = 10_000, hot_sample_mod: int = 100,
     hot: DataFrame | None = None,
 ) -> DataFrame:
     """(term, df, cf, doc_ids, tfs, dls) with parallel arrays sorted by
-    doc_id — the encoder's input. Terms the sampled hot-set detector
-    flags (df > hot_df) are SHARDED: their postings stay split across
-    up to ``salt_factor`` rows (pmod(xxhash64(doc_id), s)), each row
-    carrying the TERM-level df/cf (so per-posting BM25 scores computed
+    doc_id, from a tf kernel's (term, doc_id, tf, dl[, positions]) rows —
+    the encoder's input. Terms the sampled hot-set detector flags
+    (df > hot_df) are SHARDED: their postings stay split across up to
+    ``salt_factor`` rows (pmod(xxhash64(doc_id), s)), each row carrying the TERM-level df/cf (so per-posting BM25 scores computed
     from any shard row are identical to the unsharded layout's). The
     giant merged row never exists — no phase-2 shuffle at all — and a
     hot term becomes multiple SEGMENT rows that the read side merges
@@ -95,12 +83,12 @@ def grouped_postings_arrays(
         salt_col,
     )
 
-    positional = "positions" in tf_dl.columns
+    positional = "positions" in tf.columns
     post = (F.struct("doc_id", "tf", "dl", "positions") if positional
             else F.struct("doc_id", "tf", "dl"))
     if salt_hot_terms:
         if hot is None:
-            hot = hot_terms(tf_dl, hot_df=hot_df, sample_mod=hot_sample_mod)
+            hot = hot_terms(tf, hot_df=hot_df, sample_mod=hot_sample_mod)
         # the hot set is tiny by definition — persist it so the
         # emptiness probe and the broadcast join don't re-run detection
         hot = hot.persist()
@@ -111,7 +99,7 @@ def grouped_postings_arrays(
             salt_hot_terms = False
     if salt_hot_terms:
         hot = hot.withColumn("_hot", F.lit(True))
-        salted = (tf_dl.join(F.broadcast(hot), "term", "left")
+        salted = (tf.join(F.broadcast(hot), "term", "left")
                   .withColumn("_hot", F.col("_hot").isNotNull())
                   .withColumn("salt", salt_col(F.col("_hot"), salt_factor)))
         partial = salted.groupBy("term", "_hot", "salt").agg(
@@ -150,7 +138,7 @@ def grouped_postings_arrays(
                     .select("term", F.col("pp").alias("p"), "df", "cf"))
         agg = cold.unionByName(hot_rows)
     else:
-        agg = tf_dl.groupBy("term").agg(
+        agg = tf.groupBy("term").agg(
             F.sort_array(F.collect_list(post)).alias("p"),
             F.count("*").cast("long").alias("df"),
             F.sum("tf").cast("long").alias("cf"),
@@ -268,7 +256,9 @@ def build_segment_index(
     hot: DataFrame | None = None, tokenizer: str = "standard",
     analyzer=None,
 ) -> SegmentIndex:
-    """SegmentIndex over a (term, doc_id, tf[, positions]) relation.
+    """SegmentIndex over a tf kernel's (term, doc_id, tf, dl[, positions])
+    rows. The term grouping is the one exchange and tf is not persisted:
+    a caller that also derives stats from tf persists it itself.
 
     ``salt_hot_terms``: terms in the ``hot`` set (or detected by the
     sampled pass) keep their postings SPLIT across shard segment rows
@@ -277,12 +267,11 @@ def build_segment_index(
     so scores are identical; the read side merges shard cursors
     (merge_term_postings), rank/score-identical to the single-row
     layout (tested + driver-verified)."""
-    # tf feeds both the per-doc dl aggregation and the join side of
-    # tf_with_dl — persist so the (often expensive: tokenize + IMC)
-    # upstream runs once; the cache lives for the index's lifetime
-    tf = tf.persist()
-    grouped = grouped_postings_arrays(tf_with_dl(tf),
-                                      salt_hot_terms=salt_hot_terms, hot=hot)
+    if "dl" not in tf.columns:
+        raise ValueError("build_segment_index needs the tf kernels' per-row "
+                         f"'dl' column; got {tf.columns}")
+    grouped = grouped_postings_arrays(tf, salt_hot_terms=salt_hot_terms,
+                                      hot=hot)
     return SegmentIndex(
         segments=encode_segments(grouped, n_docs, avgdl, n_buckets=n_buckets),
         n_docs=n_docs,
@@ -350,13 +339,13 @@ def read_segment_index(spark: SparkSession, out_dir: str) -> SegmentIndex:
 
 
 def decode_segments_tf(idx: SegmentIndex) -> DataFrame:
-    """(term, doc_id, tf[, positions]) — the compressed segments decoded
-    back to the flat tf relation, distributed (Arrow ``mapInPandas``
-    over segment rows; each task decodes only its own rows). The
-    inverse of the encode path, and the substrate for
+    """(term, doc_id, tf, dl[, positions]) — the compressed segments
+    decoded back to the tf kernels' relation, distributed (Arrow
+    ``mapInPandas`` over segment rows; each task decodes only its own
+    rows). The inverse of the encode path, and the substrate for
     :func:`merge_segment_indexes` — no re-tokenize, no source access."""
     positional = "positions_enc" in idx.segments.columns
-    cols = ["term", "n", "doc_ids_enc", "tfs_enc"]
+    cols = ["term", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
     if positional:
         cols.append("positions_enc")
 
@@ -365,6 +354,7 @@ def decode_segments_tf(idx: SegmentIndex) -> DataFrame:
             terms: list = []
             ids: list = []
             tfs: list = []
+            dls: list = []
             poss: list = []
             for i in range(len(pdf)):
                 n = int(pdf["n"].iloc[i])
@@ -373,6 +363,8 @@ def decode_segments_tf(idx: SegmentIndex) -> DataFrame:
                 terms.extend([pdf["term"].iloc[i]] * n)
                 ids.extend(d_ids.tolist())
                 tfs.extend(d_tfs.tolist())
+                dls.extend(codec.decode_varint(
+                    bytes(pdf["dls_enc"].iloc[i]), n).tolist())
                 if positional:
                     flat = codec.decode_position_lists(
                         bytes(pdf["positions_enc"].iloc[i]), d_tfs)
@@ -384,12 +376,13 @@ def decode_segments_tf(idx: SegmentIndex) -> DataFrame:
                 "term": pd.Series(terms, dtype="object"),
                 "doc_id": pd.Series(ids, dtype="int64"),
                 "tf": pd.Series(tfs, dtype="int32"),
+                "dl": pd.Series(dls, dtype="int32"),
             }
             if positional:
                 out["positions"] = pd.Series(poss, dtype="object")
             yield pd.DataFrame(out)
 
-    schema = "term string, doc_id long, tf int"
+    schema = "term string, doc_id long, tf int, dl int"
     if positional:
         schema += ", positions array<int>"
     return idx.segments.select(*cols).mapInPandas(dec, schema=schema)

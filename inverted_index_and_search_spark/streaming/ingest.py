@@ -5,9 +5,9 @@ an index must absorb new documents incrementally. Design (the standard
 LSM shape used by search engines; the delta-log protocol lives in
 ``streaming/lsm.py``):
 
-- each micro-batch is tokenized + tf-counted (the batch build's Arrow
-  in-mapper-combining kernel) and appended as a **delta segment** of
-  (term, doc_id, tf) rows partitioned by term_bucket under
+- each micro-batch is tokenized + tf-counted ONCE (the batch build's
+  tf kernel) and appended as a **delta segment** of
+  (term, doc_id, tf[, positions]) rows partitioned by term_bucket under
   ``delta_tf/batch_id=N``, its doc stats (dl, sha256) under
   ``delta_ds/batch_id=N`` — no read-modify-write on the hot path;
 - **ingest is an upsert** (Lucene ``updateDocument``): a doc's live
@@ -65,27 +65,24 @@ class StreamingIndexWriter(DeltaLog):
 
     # ------------------------------------------------------------ write
     def process_batch(self, docs_batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: append this batch's tf + doc-stat deltas."""
-        if self.positional:
-            from inverted_index_and_search_spark.operators.positional import (
-                term_doc_positions_arrow,
-            )
-            tf = term_doc_positions_arrow(docs_batch,
-                                          content_col=self.content_col,
-                                          id_col=self.id_col,
-                                          tokenizer=self.tokenizer,
-                                          analyzer=self.analyzer)
-        else:
-            tf = ib.term_doc_tf_arrow(docs_batch, content_col=self.content_col,
-                                      id_col=self.id_col,
-                                      tokenizer=self.tokenizer,
-                                      analyzer=self.analyzer)
-        tf = tf.withColumn("term_bucket",
-                           ib.term_bucket_col(F.col("term"), self.n_buckets))
-        self._append(tf, self.rows_dir, batch_id, "term_bucket")
-        ds = ib.doc_stats(docs_batch, tf, content_col=self.content_col,
-                          id_col=self.id_col)
-        self._append(ds, self.docs_dir, batch_id)
+        """foreachBatch hook: append this batch's tf + doc-stat deltas,
+        both from one kernel pass cached only for the call."""
+        from inverted_index_and_search_spark.operators import positional as pos
+
+        kernel = (pos.term_doc_positions_arrow if self.positional
+                  else ib.term_doc_tf_arrow)
+        tf = kernel(docs_batch, content_col=self.content_col,
+                    id_col=self.id_col, tokenizer=self.tokenizer,
+                    analyzer=self.analyzer).drop("dl").persist()
+        try:
+            self._append(tf.withColumn("term_bucket", ib.term_bucket_col(
+                F.col("term"), self.n_buckets)),
+                self.rows_dir, batch_id, "term_bucket")
+            ds = ib.doc_stats(docs_batch, tf, content_col=self.content_col,
+                              id_col=self.id_col)
+            self._append(ds, self.docs_dir, batch_id)
+        finally:
+            tf.unpersist()
 
     # ------------------------------------------------------------- read
     def live_index(self, spark: SparkSession) -> ib.Index:
@@ -131,8 +128,10 @@ class StreamingIndexWriter(DeltaLog):
 
         live = self.live_index(spark)
         n_docs, avgdl = live.collection_stats()
+        # dl joins on from the live doc stats (one row per doc)
+        tf = live.tf.join(live.doc_stats.select("doc_id", "dl"), "doc_id")
         sidx = sg.build_segment_index(
-            live.tf, n_docs, avgdl, n_buckets=self.n_buckets,
+            tf, n_docs, avgdl, n_buckets=self.n_buckets,
             tokenizer=self.tokenizer, analyzer=self.analyzer)
         sg.write_segment_index(sidx, seg_dir)
 

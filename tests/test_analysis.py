@@ -103,10 +103,14 @@ def test_analyzed_build_matches_python_oracle(spark, docs_df, corpus_pdf,
         for t, c in Counter(ana.analyze_py(tokenize(content))).items():
             want.add((t, int(doc_id), c))
     assert got == want
-    # doc length counts post-analysis tokens
+    # doc length counts post-analysis tokens, in the doc table and on
+    # every kernel row
+    want_dl = {int(d): len(ana.analyze_py(tokenize(c)))
+               for d, c in zip(corpus_pdf["doc_id"], corpus_pdf["content"])}
     dls = {r["doc_id"]: r["dl"] for r in idx.doc_stats.collect()}
-    for doc_id, content in zip(corpus_pdf["doc_id"], corpus_pdf["content"]):
-        assert dls[int(doc_id)] == len(ana.analyze_py(tokenize(content)))
+    assert dls == want_dl
+    assert {(r["doc_id"], r["dl"]) for r in idx.tf.collect()} == \
+        {(d, n) for d, n in want_dl.items() if n}
 
 
 def test_analyzer_roundtrips_through_meta(spark, docs_df, tmp_path):
@@ -218,16 +222,18 @@ def test_analyzed_positional_paths_agree(spark, docs_df, corpus_pdf):
     ana = Analyzer.make(["def", "return"], stem=True)
     for tokenizer in ("standard", "code"):
         tokenize = tokenizer_py(tokenizer)
-        got = {(r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
+        got = {(r["term"], r["doc_id"], r["tf"], tuple(r["positions"]),
+                r["dl"])
                for r in term_doc_positions_arrow(
                    docs_df, analyzer=ana, tokenizer=tokenizer).collect()}
         want = set()
         for doc_id, content in zip(corpus_pdf["doc_id"],
                                    corpus_pdf["content"]):
+            toks = ana.analyze_py(tokenize(content))
             offs: dict[str, list[int]] = {}
-            for i, t in enumerate(ana.analyze_py(tokenize(content))):
+            for i, t in enumerate(toks):
                 offs.setdefault(t, []).append(i)
-            want |= {(t, int(doc_id), len(p), tuple(p))
+            want |= {(t, int(doc_id), len(p), tuple(p), len(toks))
                      for t, p in offs.items()}
         assert got == want and got, tokenizer
         assert not any(t in ("def", "return") for t, *_ in got)

@@ -133,3 +133,21 @@ def test_cli_batch_rank_bm25_means_bm25(builds, tmp_path, capsys):
     assert _search(capsys, argv + ["--rank", "bm25"]) == bm25
     assert bm25[0] == 0 and "\n1\t1\t" in "\n" + bm25[1]
     assert _search(capsys, argv)[1] != bm25[1]
+
+
+@pytest.mark.parametrize("variant", list(VARIANTS))
+def test_cli_batch_normalises_like_one_shot(builds, tmp_path, capsys,
+                                            variant):
+    """A --queries-file line goes through the build's tokenizer and
+    analyzer like a one-shot query: its --bm25 rows equal the one-shot
+    --bm25 --topk rows."""
+    text = VARIANTS[variant][1]
+    qf = tmp_path / "queries.txt"
+    qf.write_text(f"{text}\n", encoding="utf-8")
+    argv = ["search", "--index", builds[variant][1], "--index-format",
+            "segments", "--bm25", "--topk", "5"]
+    code, one, _ = _search(capsys, argv + ["--query", text])
+    bcode, batch, _ = _search(capsys, argv + ["--queries-file", str(qf)])
+    assert code == bcode == 0 and one.strip()
+    assert [ln.split("\t")[2:] for ln in batch.splitlines()] == \
+        [ln.split("\t") for ln in one.splitlines()]

@@ -39,12 +39,22 @@ def test_df_cf_stats(index, oracle_idx):
         assert r["cf"] == oracle_idx.cf(r["term"])
 
 
-def test_doc_stats_and_sha(index, oracle_idx, corpus_pdf):
+def test_doc_stats_and_sha(index, oracle_idx, corpus_pdf, docs_df):
     rows = {r["doc_id"]: r for r in index.doc_stats.collect()}
     assert set(rows) == set(oracle_idx.dl)
     for d, r in rows.items():
         assert r["dl"] == oracle_idx.dl[d]
         assert r["content_sha256"] == oracle_idx.sha[d]
+    # the tf kernels' per-row dl is the doc's token count, both tokenizers
+    from inverted_index_and_search_spark.tokenizer import tokenizer_py
+
+    assert all(r["dl"] == oracle_idx.dl[r["doc_id"]]
+               for r in index.tf.collect())
+    code = tokenizer_py("code")
+    code_dl = {int(d): len(code(c))
+               for d, c in zip(corpus_pdf["doc_id"], corpus_pdf["content"])}
+    assert all(r["dl"] == code_dl[r["doc_id"]] for r in
+               ib.term_doc_tf_arrow(docs_df, tokenizer="code").collect())
     # per-row invariant directly vs source rows
     for _, src in corpus_pdf.iterrows():
         assert (

@@ -33,6 +33,40 @@ def n_nodes(plan: str, op: str) -> int:
 PY_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
 
+def executed_nodes(df) -> dict[str, int]:
+    """Run ``df`` to a noop sink, then count the executed plan's hash
+    Exchanges ("hash"), BroadcastExchanges ("broadcast") and
+    MapInPandas nodes. AQE stages are walked into; a cached relation's
+    inner plan counts once however many scans read it."""
+    df.write.format("noop").mode("overwrite").save()
+    counts = {"hash": 0, "broadcast": 0, "MapInPandas": 0}
+    seen: set[int] = set()
+
+    def walk(node) -> None:
+        cls = node.getClass().getSimpleName()
+        if cls == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            if builder.hashCode() not in seen:
+                seen.add(builder.hashCode())
+                walk(builder.cachedPlan())
+            return
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if cls == "ShuffleExchangeExec":
+            part = node.outputPartitioning().getClass().getSimpleName()
+            counts["hash"] += part == "HashPartitioning"
+        counts["broadcast"] += cls == "BroadcastExchangeExec"
+        counts["MapInPandas"] += cls == "MapInPandasExec"
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return counts
+
+
 def test_postings_build_has_two_exchanges_jvm_path(spark):
     """The code tokenizer's tf entry point is the JVM chain: explode +
     partial/final count, then the postings agg — no Python node."""
@@ -320,7 +354,7 @@ def test_sharded_segments_build_has_no_payload_window(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
     grouped = seg.grouped_postings_arrays(
-        seg.tf_with_dl(tf), hot=tf.select("term").distinct())
+        tf, hot=tf.select("term").distinct())
     plan = explain(grouped)
     assert n_nodes(plan, "Window") == 0, plan
     assert "BroadcastHashJoin" in plan, plan
@@ -331,6 +365,50 @@ def test_sharded_segments_build_has_no_payload_window(spark):
         hot_plan = explain(ib.hot_terms_from_docs(
             docs, content_col="text", tokenizer=tokenizer))
         assert n_nodes(hot_plan, "Exchange") == 1, hot_plan
+
+
+@pytest.mark.parametrize("kernel,tokenizer,hash_exchanges", [
+    ("tf", "standard", 1), ("positions", "standard", 1), ("tf", "code", 2)])
+def test_segment_build_has_no_dl_exchange(spark, kernel, tokenizer,
+                                          hash_exchanges):
+    """dl rides the tf kernel's rows, so the segment build's only
+    exchanges are the code chain's tf aggregation and the term grouping:
+    no doc_id-keyed aggregation, no dl broadcast join, and no cache."""
+    from inverted_index_and_search_spark.operators import positional as pos
+    from inverted_index_and_search_spark.operators import segments as seg
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    make = (ib.term_doc_tf_arrow if kernel == "tf"
+            else pos.term_doc_positions_arrow)
+    tf = make(docs, content_col="text", id_col="doc_id", tokenizer=tokenizer)
+    hot = ib.hot_terms_from_docs(docs, content_col="text",
+                                 tokenizer=tokenizer)
+    sidx = seg.build_segment_index(tf, 100, 10.0, hot=hot,
+                                   tokenizer=tokenizer)
+    got = executed_nodes(sidx.segments)
+    assert got["hash"] == hash_exchanges, got
+    assert got["broadcast"] == 0, got
+    assert not tf.is_cached
+
+
+def test_inline_dl_build_plan_equals_plain(spark):
+    """build_index(inline_dl=True) folds the kernel's dl into the
+    posting struct: one tokenize pass and one exchange, like the plain
+    build (it was a second tokenize pass plus a doc_id-keyed join)."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    want = {"hash": 1, "broadcast": 0, "MapInPandas": 1}
+    for inline_dl in (False, True):
+        idx = ib.build_index(docs, content_col="text", id_col="doc_id",
+                             inline_dl=inline_dl)
+        assert executed_nodes(idx.postings) == want, inline_dl
+
+
+def test_segment_build_requires_dl(spark):
+    from inverted_index_and_search_spark.operators import segments as seg
+
+    tf = spark.createDataFrame([("a", 1, 2)], "term string, doc_id long, tf int")
+    with pytest.raises(ValueError, match="dl"):
+        seg.build_segment_index(tf, 1, 2.0)
 
 
 def test_route_cache_keyed_by_application_id(spark):

@@ -64,11 +64,8 @@ def test_positions_match_token_offsets(docs_df, corpus_pdf, tokenizer):
     the term under the python twin of that tokenizer."""
     from inverted_index_and_search_spark.tokenizer import tokenizer_py
 
-    got = {
-        (r["term"], int(r["doc_id"])): list(r["positions"])
-        for r in pos.term_doc_positions_arrow(
-            docs_df, tokenizer=tokenizer).collect()
-    }
+    rows = pos.term_doc_positions_arrow(docs_df, tokenizer=tokenizer).collect()
+    got = {(r["term"], int(r["doc_id"])): list(r["positions"]) for r in rows}
     # spot-check every term of a handful of docs, fully
     for doc_id, content in list(
             zip(corpus_pdf["doc_id"], corpus_pdf["content"]))[:5]:
@@ -78,6 +75,10 @@ def test_positions_match_token_offsets(docs_df, corpus_pdf, tokenizer):
             want.setdefault(t, []).append(i)
         for t, posns in want.items():
             assert got[(t, int(doc_id))] == posns
+    # every row's dl is its doc's token count
+    want_dl = {int(d): len(tokenizer_py(tokenizer)(c))
+               for d, c in zip(corpus_pdf["doc_id"], corpus_pdf["content"])}
+    assert all(r["dl"] == want_dl[int(r["doc_id"])] for r in rows)
 
 
 @pytest.mark.parametrize("phrase", PHRASES, ids=["-".join(p) for p in PHRASES])

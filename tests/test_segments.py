@@ -205,6 +205,7 @@ def test_decode_segments_tf_roundtrip(seg_index, oracle_idx):
     for r in rows:
         got.setdefault(r["term"], {})[r["doc_id"]] = r["tf"]
     assert got == oracle_idx.postings
+    assert all(r["dl"] == oracle_idx.dl[r["doc_id"]] for r in rows)
 
 
 def test_merge_segment_indexes_equals_whole_build(spark, docs_df,

@@ -211,6 +211,33 @@ def test_compact_segments_equals_batch_segment_build(spark, docs_df,
         sg.phrase_docs(batch, ["def", "return"])
 
 
+@pytest.mark.parametrize("positional", [False, True])
+def test_process_batch_tokenizes_once(spark, docs_df, tmp_path, positional):
+    """A micro-batch's rows and doc stats come from one kernel pass: the
+    batch content is evaluated twice, once by the tokenizer and once by
+    the sha256 of the doc stats (a third, re-tokenizing pass for the
+    doc lengths is gone), and no cache outlives the call."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    docs = docs_df.select("doc_id", "content")
+    batch = docs.mapInPandas(counted, schema=docs.schema)
+    writer = ingest.StreamingIndexWriter(str(tmp_path / "ingest"),
+                                         positional=positional)
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    writer.process_batch(batch, 0)
+    assert seen.value == 2 * docs.count()
+    assert cached().size() == before
+    rows = spark.read.parquet(str(tmp_path / "ingest" / "delta_tf"))
+    assert rows.columns[:3] == ["term", "doc_id", "tf"]
+    assert "dl" not in rows.columns
+
+
 def test_delete_docs_tombstones(spark, docs_df, tmp_path):
     """LSM deletes: tombstone -> live view and compaction equal a batch
     build over the surviving docs; a later re-ingest brings a doc back;

@@ -49,10 +49,32 @@ def main() -> None:
     tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
     sections.append((
         "Index build — postings aggregation (Arrow in-mapper-combining tf path)",
-        "One exchange total: the Arrow UDF emits pre-aggregated (term, doc_id, tf), "
+        "One exchange total: the Arrow UDF emits pre-aggregated (term, doc_id, tf, dl), "
         "so the only shuffle is the per-term postings aggregation "
         "(partial+final ObjectHashAggregate).",
         explain(ib.postings(tf))))
+
+    from inverted_index_and_search_spark.operators import segments as sg
+    sections.append((
+        "Compressed segment build",
+        "One exchange: the per-term grouping feeding the Arrow encoder. "
+        "Each doc's length arrives as the tf kernel's dl column (its "
+        "token count, taken while tokenizing), so there is no doc_id-"
+        "keyed aggregation, no dl join and no cached tf. The empty hot "
+        "set (nothing at this scale has df > 10k) skips the sharded "
+        "branch.",
+        explain(sg.build_segment_index(
+            tf, docs.count(), 100.0,
+            hot=ib.hot_terms_from_docs(docs, content_col="text")).segments)))
+
+    sections.append((
+        "Index build with inline dl (build_index(inline_dl=True))",
+        "The plain build's plan with dl in the posting struct: one "
+        "tokenize pass (one MapInPandas) and one exchange. The kernel's "
+        "dl column is cast to long inside the struct; no doc_id-keyed "
+        "aggregation and no join.",
+        explain(ib.build_index(docs, content_col="text", id_col="doc_id",
+                               inline_dl=True).postings)))
 
     tmp = tempfile.mkdtemp(prefix="iis_plan_")
     idx = ib.build_index(docs, content_col="text", id_col="doc_id")
@@ -105,7 +127,6 @@ def main() -> None:
         "the prefix sum, never data rows.",
         explain(with_doc_id(corpus_df(spark, 200, partitions=4)))))
 
-    from inverted_index_and_search_spark.operators import segments as sg
     n_docs = docs.count()
     avgdl = 100.0
     sidx = sg.build_segment_index(tf, n_docs, avgdl)
