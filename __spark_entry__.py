@@ -103,13 +103,13 @@ def _q_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_term_stats_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(path, term, df, cf) — the per-term stats through BOTH the plain
     one-shot aggregation AND the skew-salted two-phase path with a
-    FORCED all-hot set (hot_df=0, sample_mod=1): driver-checks that
-    salting never changes results, not just pytest."""
+    FORCED all-hot set (every term passed as hot): the oracle row
+    checks that salting never changes results, not just pytest."""
     plain = _q_term_stats(spark, sf_dir).select(
         F.lit("plain").alias("path"), "term", "df", "cf")
     docs = _docs(spark, sf_dir)
     tf = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
-    p = ib.postings(tf, salt_hot_terms=True, hot_df=0, hot_sample_mod=1)
+    p = ib.postings(tf, hot=tf.select("term").distinct())
     salted = p.select(F.lit("salted").alias("path"), "term",
                       F.col("df").cast("long").alias("df"),
                       F.col("cf").cast("long").alias("cf"))
@@ -404,7 +404,7 @@ def _q_phrase_match_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdp = pos.term_doc_positions_arrow(docs, content_col="text",
                                        id_col="doc_id")
     all_terms = tdp.select("term").distinct()
-    sharded = pos.positional_postings(tdp, hot=all_terms, shard_factor=8)
+    sharded = pos.positional_postings(tdp, hot=all_terms)
     idx = ib.Index(postings=sharded,
                    doc_stats=ib.doc_stats(docs, tdp, content_col="text",
                                           id_col="doc_id"),

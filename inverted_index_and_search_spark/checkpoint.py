@@ -134,9 +134,10 @@ def build_resumable(
             continue
         t0 = time.perf_counter()
         part = spark.read.parquet(f"{out_dir}/stage/tf_dl/term_bucket={b}")
-        grouped = seg.grouped_postings_arrays(part, salt_hot_terms=True)
-        encoded = seg.encode_segments(grouped, n_docs, avgdl,
-                                      n_buckets=n_buckets).drop("term_bucket")
+        encoded = seg.build_segment_index(
+            part, n_docs, avgdl, n_buckets=n_buckets,
+            hot=ib.hot_terms(part), tokenizer=tokenizer,
+        ).segments.drop("term_bucket")
         bucket_path = f"{out_dir}/segments/term_bucket={b}"
         encoded.write.mode("overwrite").parquet(bucket_path)
         persisted = spark.read.parquet(bucket_path)

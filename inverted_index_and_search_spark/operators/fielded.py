@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from inverted_index_and_search_spark.operators.index_build import (
     DEFAULT_BUCKETS,
     Index,
+    hot_terms,
     postings,
 )
 __all__ = ["fielded_tf", "fielded_doc_stats", "build_fielded_index"]
@@ -102,7 +103,8 @@ def build_fielded_index(docs: DataFrame, fields: dict[str, float], *,
     """
     tf = fielded_tf(docs, fields, id_col=id_col, tokenizer=tokenizer,
                     analyzer=analyzer)
-    post = postings(tf, n_buckets=n_buckets, salt_hot_terms=salt_hot_terms)
+    post = postings(tf, n_buckets=n_buckets,
+                    hot=hot_terms(tf) if salt_hot_terms else None)
     ds = fielded_doc_stats(docs, tf, fields, id_col=id_col)
     return Index(postings=post, doc_stats=ds, tf=tf, n_buckets=n_buckets,
                  tokenizer=tokenizer, analyzer=analyzer)

@@ -65,6 +65,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from inverted_index_and_search_spark.operators import index_build as ib
 from inverted_index_and_search_spark.operators.index_build import (
     DEFAULT_BUCKETS,
     bucket_route_col,
@@ -77,6 +78,11 @@ GRAM_N = 3
 #: prefilter width: more grams = fewer candidates but more index rows
 #: scanned; 8 rarest grams is plenty for code-shaped needles
 DEFAULT_MAX_GRAMS = 8
+#: compressed layout skew guard: a gram is hot when its sampled df
+#: exceeds GRAM_HOT_DF; a hot gram's doc-id list splits into GRAM_SHARDS
+#: rows
+GRAM_HOT_DF = 100_000
+GRAM_SHARDS = 64
 
 
 # ---------------------------------------------------------------- build
@@ -149,9 +155,6 @@ def build_trigram_segments(docs: DataFrame, *, content_col: str = "content",
                            id_col: str = "doc_id",
                            n_buckets: int = DEFAULT_BUCKETS,
                            case_insensitive: bool = False,
-                           shard_factor: int = 64,
-                           hot_df: int = 100_000,
-                           hot_sample_mod: int = 100,
                            hot: DataFrame | None = None) -> TrigramIndex:
     """COMPRESSED trigram layout: one (gram, shard) row holding the
     shard's sorted doc ids delta+varint-encoded (kernels/codec — the
@@ -163,42 +166,38 @@ def build_trigram_segments(docs: DataFrame, *, content_col: str = "content",
     of magnitude (Zoekt stores exactly this shape). Skew: a stop-gram
     (" th") rides nearly every document, so its single merged list
     would be the giant-row straggler the TERM index sharded away —
-    grams the sampled detector flags hot keep their lists SPLIT across
-    ``shard_factor`` rows by pmod(xxhash64(doc_id), s); readers union
-    shard decodes (candidate counting is agnostic to row grouping).
-    Query results are identical to the flat layout (tested).
+    the ``hot`` grams (detected by default, see
+    :func:`segments_from_flat`) keep their lists SPLIT across
+    GRAM_SHARDS rows by pmod(xxhash64(doc_id), GRAM_SHARDS); readers
+    union shard decodes (candidate counting is agnostic to row
+    grouping). Query results are identical to the flat layout (tested).
     """
     flat = build_trigram_index(docs, content_col=content_col,
                                id_col=id_col, n_buckets=n_buckets,
                                case_insensitive=case_insensitive).grams
     return segments_from_flat(flat, n_buckets=n_buckets,
-                              case_insensitive=case_insensitive,
-                              shard_factor=shard_factor, hot_df=hot_df,
-                              hot_sample_mod=hot_sample_mod, hot=hot)
+                              case_insensitive=case_insensitive, hot=hot)
 
 
 def segments_from_flat(flat: DataFrame, *,
                        n_buckets: int = DEFAULT_BUCKETS,
                        case_insensitive: bool = False,
-                       shard_factor: int = 64,
-                       hot_df: int = 100_000,
-                       hot_sample_mod: int = 100,
                        hot: DataFrame | None = None) -> TrigramIndex:
     """Compressed layout from an existing flat (gram, gram_bucket,
     doc_id) relation — the shared tail of :func:`build_trigram_segments`
-    and LSM compaction (which already holds flat delta rows)."""
+    and LSM compaction (which already holds flat delta rows).
+    ``hot=None`` detects the (gram) hot set on the index_build document
+    sample, with the GRAM_HOT_DF threshold. The grouping stays apart
+    from index_build.group_postings: its rows keep the per-shard
+    ``p_df`` and carry no tf."""
     if hot is None:
-        sampled = flat.where(
-            F.pmod(F.xxhash64("doc_id"), F.lit(hot_sample_mod)) == 0)
-        hot = (sampled.groupBy("gram").count()
-               .where(F.col("count") * hot_sample_mod > hot_df)
-               .select("gram"))
+        hot = ib.hot_keys(ib.doc_sample(flat), "gram", GRAM_HOT_DF)
     hot = hot.withColumn("_hot", F.lit(True))
     sharded = (flat.join(F.broadcast(hot), "gram", "left")
                .withColumn("shard",
                            F.when(F.col("_hot").isNotNull(),
                                   F.pmod(F.xxhash64("doc_id"),
-                                         F.lit(shard_factor)))
+                                         F.lit(GRAM_SHARDS)))
                            .otherwise(F.lit(0)).cast("int")))
     # flat rows are unique per (gram, doc) — the build emits distinct
     # grams per doc and the LSM live view keeps one version per doc —

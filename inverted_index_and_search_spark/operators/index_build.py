@@ -13,9 +13,10 @@ reference built by hand:
 
 North-rule additions absent in the reference: doc-length / collection /
 per-term statistics for BM25, explicit term-hash bucketing
-(``term_bucket``) for pruned query-time lookups, skew salting for hot
-terms (``salted`` path), typed ``struct<doc_id,tf>`` postings instead of
-``"file:count"`` strings (reference ``spark/inverted_index_search.py:212``).
+(``term_bucket``) for pruned query-time lookups, hot-term skew grouping
+(:func:`group_postings`), typed ``struct<doc_id,tf>`` postings instead
+of ``"file:count"`` strings (reference
+``spark/inverted_index_search.py:212``).
 
 Shuffle budget: one wide exchange (the postings agg) for the standard
 tokenizer, whose Arrow tf kernel emits pre-counted rows; two (tf agg,
@@ -35,9 +36,13 @@ from inverted_index_and_search_spark.tokenizer import tokenize_batch, tokenizer_
 #: default number of term-hash buckets for the persisted index layout
 DEFAULT_BUCKETS = 32
 
-#: docs containing a term in more partitions than this fraction of the
-#: corpus are treated as skewed ("hot") and salted during aggregation
-DEFAULT_HOT_DF = 10_000
+#: hot-term skew guard (:func:`group_postings`): a term is hot when its
+#: document frequency, estimated on the docs with pmod(xxhash64(doc_id),
+#: HOT_SAMPLE_MOD) == 0, exceeds HOT_DF; a hot term's postings group
+#: into HOT_SHARDS pieces. Read at call time.
+HOT_DF = 10_000
+HOT_SAMPLE_MOD = 100
+HOT_SHARDS = 16
 
 
 def term_bucket_col(term: F.Column, n_buckets: int) -> F.Column:
@@ -231,150 +236,176 @@ def corpus_stats(docs: DataFrame, tf: DataFrame) -> tuple[int, float]:
     return n_docs, (total / n_docs if n_docs else 0.0)
 
 
-def hot_terms(tf: DataFrame, *, hot_df: int = DEFAULT_HOT_DF,
-              sample_mod: int = 100) -> DataFrame:
-    """(term) — terms whose document frequency exceeds ``hot_df``,
-    estimated from a deterministic ~1/sample_mod sample of documents
-    (pmod(xxhash64(doc_id), m) == 0), so detection costs one map-side
-    filter + a small agg instead of a full df pass. Hot terms are by
-    definition frequent, so the sample finds them reliably; a missed
-    borderline term merely stays unsalted (correctness unaffected —
-    salting only changes aggregation grouping, never results)."""
-    sampled = tf.where(F.pmod(F.xxhash64("doc_id"), F.lit(sample_mod)) == 0)
-    return (sampled.groupBy("term").count()
-            .where(F.col("count") * sample_mod > hot_df)
-            .select("term"))
+def hot_terms(tf: DataFrame) -> DataFrame:
+    """(term) hot set of a (term, doc_id, ...) relation: the terms whose
+    document frequency, counted on the :func:`doc_sample` and scaled
+    up, exceeds :data:`HOT_DF` — one map-side filter and a small
+    aggregation instead of a full df pass. Hot terms are frequent by
+    definition, so the sample finds them; a missed borderline term
+    merely stays in one group (sharding changes row grouping, never
+    results)."""
+    return hot_keys(doc_sample(tf), "term", HOT_DF)
 
 
 def hot_terms_from_docs(docs: DataFrame, *, content_col: str = "content",
-                        id_col: str = "doc_id", hot_df: int = DEFAULT_HOT_DF,
-                        sample_mod: int = 100,
+                        id_col: str = "doc_id",
                         tokenizer: str = "standard",
                         analyzer=None) -> DataFrame:
-    """(term) hot set detected by tokenizing a deterministic
-    ~1/sample_mod DOCUMENT sample — the preferred detection source.
+    """(term) hot set detected by tokenizing the :func:`doc_sample` of
+    the DOCUMENTS — the preferred source for builders that hold docs.
 
     Detecting from the shared ``tf`` relation looks cheaper but is not:
     ``write_index`` persists tf, so any scan of it materializes the
     full cache — and because the hot set feeds a broadcast, that scan
     races the main aggregation and the whole tokenize+tf pipeline runs
     twice concurrently. Sampling the *docs* plan instead pushes the
-    pmod(doc_id) filter below the tokenizer (a distinct plan, no cache
+    sample filter below the tokenizer (a distinct plan, no cache
     interaction), so detection costs ~1% of one tokenize pass. Each
     doc contributes its DISTINCT terms (array_distinct before the
     explode), so df is one term-keyed count: a single exchange."""
-    sampled = docs.where(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(sample_mod)) == 0)
     tok = tokenizer_col(tokenizer)(F.col(content_col))
     if analyzer is not None and not analyzer.is_identity:
         tok = analyzer.analyze_tokens_col(tok)
-    df_s = (sampled.select(F.explode(F.array_distinct(tok)).alias("term"))
-            .groupBy("term").count())
-    return df_s.where(F.col("count") * sample_mod > hot_df).select("term")
+    terms = doc_sample(docs, id_col).select(
+        F.explode(F.array_distinct(tok)).alias("term"))
+    return hot_keys(terms, "term", HOT_DF)
 
 
-def salt_col(hot_flag: F.Column, salt_factor: int) -> F.Column:
-    """Per-row aggregation salt: spread hot terms over ``salt_factor``
-    partial groups, keep the long tail in one group (salt 0)."""
-    return F.when(hot_flag,
-                  F.pmod(F.xxhash64("doc_id"), F.lit(salt_factor))
-                  ).otherwise(F.lit(0)).alias("salt")
+def doc_sample(rows: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The hot-set detectors' deterministic ~1/HOT_SAMPLE_MOD document
+    sample: pmod(xxhash64(doc_id), HOT_SAMPLE_MOD) == 0."""
+    return rows.where(F.pmod(F.xxhash64(F.col(id_col)),
+                             F.lit(HOT_SAMPLE_MOD)) == 0)
+
+
+def hot_keys(sampled: DataFrame, key: str, hot_df: int) -> DataFrame:
+    """(key) whose row count in a :func:`doc_sample`, scaled by
+    HOT_SAMPLE_MOD, exceeds ``hot_df``."""
+    return (sampled.groupBy(key).count()
+            .where(F.col("count") * HOT_SAMPLE_MOD > hot_df).select(key))
+
+
+def probe_hot(hot: DataFrame | None) -> DataFrame | None:
+    """The hot-set probe: ``hot`` persisted, or None when it is None or
+    empty. The set is tiny by definition, so it is cached once for the
+    emptiness check and the broadcast join (a second probe of the same
+    set reads the cache); nothing hot, the common case, skips the
+    sharded grouping entirely."""
+    if hot is None:
+        return None
+    if not hot.is_cached:
+        hot.persist()
+    if hot.isEmpty():
+        hot.unpersist()
+        return None
+    return hot
+
+
+def _aggregate(rows: DataFrame, post: F.Column, *keys: str) -> DataFrame:
+    """(*keys, postings, df, cf): the doc_id-sorted posting structs of
+    each group (sort_array orders structs by their first field, doc_id
+    — delta encoding and deterministic output need it regardless of
+    partitioning), their count and tf sum."""
+    return rows.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(post)).alias("postings"),
+        F.count("*").cast("long").alias("df"),
+        F.sum("tf").cast("long").alias("cf"),
+    )
+
+
+def group_postings(tf: DataFrame, post: F.Column, hot: DataFrame | None,
+                   *, sharded: bool) -> DataFrame:
+    """(term, df, cf, postings) — THE postings grouping of every term
+    layout (tf parquet, positional parquet, segments); ``post`` is the
+    layout's posting struct, its first field doc_id.
+
+    ``hot`` (a (term) relation, or None) is the skew guard: None or
+    empty groups by term in one aggregation. Otherwise each hot term's
+    rows spread over HOT_SHARDS groups by pmod(xxhash64(doc_id),
+    HOT_SHARDS) (a broadcast hot-flag join), while the long tail keeps
+    shard 0 — one group per term, final after this one exchange. The
+    largest collect_list task holds ~df/HOT_SHARDS postings: the
+    engine's answer to the reference's in-mapper-combiner flush
+    threshold (``TokenizerMapperStateful.java:14``). ``_hot`` rides the
+    grouping key (term determines it, so groups are unchanged) to make
+    the hot/cold split a filter. Two finishes:
+
+    - ``sharded=False`` (merged, the tf parquet layout): a second
+      aggregation flattens the HOT partials only into one row per term;
+      both branches read the same phase-1 exchange (ReuseExchange), and
+      the output is byte-identical to the unsharded grouping.
+    - ``sharded=True`` (positional parquet, segments): a hot term stays
+      split across rows, each carrying the TERM-level df/cf, so query
+      operators and kernels (which read df off the row and merge shard
+      rows) return identical results and the giant row never exists.
+      The partials persist once (spill-safe); the totals come from
+      their skinny (term, df, cf) projection, which the columnar cache
+      serves without the payload column, and broadcast-join back onto
+      the hot rows. A per-term Window over the payload rows would
+      re-exchange every posting array and co-locate a hot term's shards
+      in one task, the straggler sharding exists to prevent; the
+      broadcast without the persist re-runs the whole tf pipeline for
+      the totals side.
+    """
+    hot = probe_hot(hot)
+    if hot is None:
+        return _aggregate(tf, post, "term")
+    flag = hot.select("term", F.lit(True).alias("_hot"))
+    rows = (tf.join(F.broadcast(flag), "term", "left")
+            .withColumn("_hot", F.col("_hot").isNotNull())
+            .withColumn("shard", F.when(F.col("_hot"), F.pmod(
+                F.xxhash64("doc_id"), F.lit(HOT_SHARDS))).otherwise(F.lit(0))))
+    partial = _aggregate(rows, post, "term", "_hot", "shard")
+    if sharded:
+        partial = partial.persist()
+    hot_part = partial.where(F.col("_hot"))
+    sums = (F.sum("df").cast("long").alias("df"),
+            F.sum("cf").cast("long").alias("cf"))
+    if sharded:
+        totals = hot_part.groupBy("term").agg(*sums)
+        hot_rows = hot_part.drop("df", "cf").join(F.broadcast(totals), "term")
+    else:
+        merged = F.sort_array(F.flatten(F.collect_list("postings")))
+        hot_rows = hot_part.groupBy("term").agg(merged.alias("postings"),
+                                                *sums)
+    cols = ("term", "df", "cf", "postings")
+    return (partial.where(~F.col("_hot")).select(*cols)
+            .unionByName(hot_rows.select(*cols)))
+
+
+def bucketed_postings(grouped: DataFrame, n_buckets: int) -> DataFrame:
+    """(term, term_bucket, df, cf, postings) — the parquet layouts' row."""
+    return grouped.withColumn(
+        "term_bucket", term_bucket_col(F.col("term"), n_buckets)).select(
+        "term", "term_bucket", "df", "cf", "postings")
 
 
 def postings(tf: DataFrame, *, n_buckets: int = DEFAULT_BUCKETS,
-             salt_hot_terms: bool = False, hot_df: int = DEFAULT_HOT_DF,
-             salt_factor: int = 16, hot_sample_mod: int = 100,
              hot: DataFrame | None = None,
              inline_dl: bool = False) -> DataFrame:
-    """(term, term_bucket, df, cf, postings: array<struct<doc_id,tf>>).
+    """(term, term_bucket, df, cf, postings: array<struct<doc_id,tf>>),
+    one row per term: the merged finish of :func:`group_postings`, so
+    the terms in ``hot`` are salted and merged back byte-identically.
 
     ``inline_dl=True`` adds tf's ``dl`` to the struct (inline-dl layout):
     scorers then skip the doc_stats broadcast (query._explode_postings).
-
-    Postings sorted by doc_id asc (required for delta encoding and for
-    deterministic output regardless of partitioning — SURVEY.md §7).
-
-    ``salt_hot_terms``: two-phase aggregation for skewed terms — but
-    only for terms detected hot (df > hot_df) by a cheap sampled pass
-    (:func:`hot_terms`; round-1 salted EVERY term x16, taxing the long
-    tail with 16x more partial groups). Phase 1 aggregates (term, salt)
-    where salt = pmod(hash(doc_id), s) for hot terms and 0 otherwise.
-    A NON-hot term's phase-1 group (salt 0) is already its final
-    postings row, so phase 2 — the merge of partial lists per term —
-    runs over the HOT terms' rows only: the second shuffle carries a
-    handful of skewed terms' partials, not the whole corpus's postings
-    payload (round 2 re-shuffled everything through phase 2; measured
-    2.1 s -> 5.5 s on the 20k-file synth build when nothing was even
-    hot). Both branches consume the SAME phase-1 exchange (Catalyst
-    ReuseExchange — plan-gated), so the tokenize+tf stage still runs
-    once. Output is byte-identical to the unsalted path (verified in
-    tests) because every postings list is sort_array'd. This bounds the
-    largest single collect_list task at ~df/s postings, the engine's
-    answer to the reference's IMC flush threshold
-    (TokenizerMapperStateful.java:14).
     """
     post = F.struct(F.col("doc_id"), F.col("tf"),
                     *([F.col("dl").cast("long").alias("dl")] if inline_dl
                       else []))
-    if salt_hot_terms:
-        # prefer a caller-supplied hot set (hot_terms_from_docs — see
-        # its docstring for why detecting from the shared/cached tf
-        # relation double-computes the pipeline); fall back to tf-based
-        # detection for callers without a docs handle
-        if hot is None:
-            hot = hot_terms(tf, hot_df=hot_df, sample_mod=hot_sample_mod)
-        # tiny by definition — persist so the emptiness probe and the
-        # broadcast join don't re-run detection; nothing hot (the
-        # common case) skips the two-phase machinery entirely
-        hot = hot.persist()
-        if hot.isEmpty():
-            hot.unpersist()
-            salt_hot_terms = False
-    if not salt_hot_terms:
-        agg = tf.groupBy("term").agg(
-            F.sort_array(F.collect_list(post)).alias("postings"),
-            F.count("*").cast("long").alias("df"),
-            F.sum("tf").cast("long").alias("cf"),
-        )
-    else:
-        hot = hot.withColumn("_hot", F.lit(True))
-        salted = (tf.join(F.broadcast(hot), "term", "left")
-                  .withColumn("_hot", F.col("_hot").isNotNull())
-                  .withColumn("salt", salt_col(F.col("_hot"), salt_factor)))
-        # _hot joins the grouping key (term determines it, so groups are
-        # unchanged) purely to make the post-agg hot/cold split free
-        partial = salted.groupBy("term", "_hot", "salt").agg(
-            F.sort_array(F.collect_list(post)).alias("p_postings"),
-            F.count("*").cast("long").alias("p_df"),
-            F.sum("tf").cast("long").alias("p_cf"),
-        )
-        cold = partial.where(~F.col("_hot")).select(
-            "term",
-            F.col("p_postings").alias("postings"),
-            F.col("p_df").alias("df"),
-            F.col("p_cf").alias("cf"),
-        )
-        hot_merged = partial.where(F.col("_hot")).groupBy("term").agg(
-            F.sort_array(F.flatten(F.collect_list("p_postings"))).alias("postings"),
-            F.sum("p_df").cast("long").alias("df"),
-            F.sum("p_cf").cast("long").alias("cf"),
-        )
-        agg = cold.unionByName(hot_merged)
-    return agg.withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets)).select(
-        "term", "term_bucket", "df", "cf", "postings"
-    )
+    return bucketed_postings(group_postings(tf, post, hot, sharded=False),
+                             n_buckets)
 
 
 @dataclass
 class Index:
     """In-memory handle on the index tables (all lazy DataFrames).
 
-    ``sharded=True`` marks layouts where one term's postings may span
-    MULTIPLE rows (hot-term posting-list sharding,
-    positional.positional_postings): wire-format sinks must merge shard
-    rows back to one line per term, which costs a full groupBy shuffle —
-    so the merge runs only when the layout can actually contain
-    multi-row terms."""
+    ``sharded=True`` marks layouts where some term's postings span
+    MULTIPLE rows (a non-empty hot set through the sharded finish of
+    :func:`group_postings`): wire-format sinks must merge shard rows
+    back to one line per term, which costs a full groupBy shuffle — so
+    the merge runs only when the layout does contain multi-row terms."""
 
     postings: DataFrame  # term, term_bucket, df, cf, postings
     doc_stats: DataFrame  # doc_id, dl, content_sha256
@@ -423,7 +454,8 @@ def build_index(docs: DataFrame, *, content_col: str = "content",
 
     ``use_pandas_udf`` is accepted and ignored: the kernel is no longer
     selectable, and the keyword stays only because the frozen bench
-    script still passes it.
+    script still passes it. ``salt_hot_terms=True`` passes
+    :func:`hot_terms_from_docs` to :func:`postings` as the hot set.
 
     ``inline_dl=True`` folds each doc's length into its posting
     structs, (doc_id, tf, dl) — scorers then skip the doc_stats
@@ -434,14 +466,11 @@ def build_index(docs: DataFrame, *, content_col: str = "content",
     """
     tf = term_doc_tf_arrow(docs, content_col=content_col, id_col=id_col,
                            analyzer=analyzer, tokenizer=tokenizer)
-    hot = None
-    if salt_hot_terms:
-        hot = hot_terms_from_docs(docs, content_col=content_col,
-                                  id_col=id_col, tokenizer=tokenizer,
-                                  analyzer=analyzer)
+    hot = (hot_terms_from_docs(docs, content_col=content_col, id_col=id_col,
+                               tokenizer=tokenizer, analyzer=analyzer)
+           if salt_hot_terms else None)
     return Index(
-        postings=postings(tf, n_buckets=n_buckets,
-                          salt_hot_terms=salt_hot_terms, hot=hot,
+        postings=postings(tf, n_buckets=n_buckets, hot=hot,
                           inline_dl=inline_dl),
         doc_stats=doc_stats(docs, tf, content_col=content_col, id_col=id_col),
         tf=tf,

@@ -31,7 +31,7 @@ Scale notes:
   as boolean/BM25 queries (query._query_postings).
 - the k-way join is on doc_id with k small (phrase length); every side
   is one term's pruned postings. Skewed (stop-)words in phrases hit the
-  same salting/bucket guards as the tf index.
+  same hot-term sharding/bucket guards as the tf index.
 """
 
 from __future__ import annotations
@@ -41,13 +41,13 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from inverted_index_and_search_spark.operators import index_build as ib
 from inverted_index_and_search_spark.operators.index_build import (
     DEFAULT_BUCKETS,
     Index,
     _arrow_kernel,
     _explode_bound,
     doc_stats,
-    term_bucket_col,
 )
 from inverted_index_and_search_spark.operators.query import (
     K1,
@@ -121,84 +121,20 @@ def term_doc_positions_arrow(docs: DataFrame, *, content_col: str = "content",
 
 def positional_postings(tdp: DataFrame, *,
                         n_buckets: int = DEFAULT_BUCKETS,
-                        hot: DataFrame | None = None,
-                        shard_factor: int = 64) -> DataFrame:
+                        hot: DataFrame | None = None) -> DataFrame:
     """(term, term_bucket, df, cf, postings) with positional structs,
-    postings sorted by doc_id asc (sort_array on the struct orders by
-    the first field). Same shape contract as index_build.postings.
-
-    Skew handling — hot-term POSTING-LIST SHARDING: positions multiply
-    a hot term's payload ~avg-tf-fold over the tf-only layout (a
-    stop-word-class term at 10^6 docs is tens of millions of ints), so
-    merging it into ONE row is a straggler/OOM by construction. Terms
-    in the ``hot`` set are instead split into up to ``shard_factor``
-    rows by pmod(xxhash64(doc_id), s) — the standard segmented-posting-
-    list layout. Every shard row carries the TERM-level df/cf, so all
-    query operators — which explode ``postings`` and read df off the
-    row — work unchanged and return identical results (tested). There
-    is no merge phase at all for hot terms: the giant row never exists.
-
-    Term-level df/cf are attached WITHOUT moving the postings payload
-    again: the phase-1 partials persist (spill-safe local cache, the
-    only materialization), the tiny (term, p_df, p_cf) projection
-    aggregates per term — the columnar cache prunes the payload column
-    — and the totals broadcast-join back onto the payload rows. Round
-    3 used a per-term window OVER the payload rows instead, which
-    re-exchanged every posting array and co-located all of a hot
-    term's shards in one window task — the exact straggler sharding
-    exists to prevent. Cold terms (shard 0, one group) finalize in
-    phase 1 and never touch the join.
-    """
+    postings sorted by doc_id asc. Same shape contract as
+    index_build.postings, but over the SHARDED finish of
+    :func:`index_build.group_postings`: positions multiply a hot term's
+    payload ~avg-tf-fold over the tf-only layout (a stop-word-class
+    term at 10^6 docs is tens of millions of ints), so the terms in
+    ``hot`` stay split across rows, each carrying the term-level
+    df/cf; query operators explode ``postings`` and read df off the
+    row, so results are identical (tested). ``hot=None``: one row per
+    term."""
     post = F.struct(F.col("doc_id"), F.col("tf"), F.col("positions"))
-    if hot is not None:
-        # tiny by definition — persist so the emptiness probe and the
-        # broadcast join don't re-run detection; nothing hot (common
-        # case) skips the sharding machinery and its phase-1 persist
-        hot = hot.persist()
-        if hot.isEmpty():
-            hot.unpersist()
-            hot = None
-    if hot is None:
-        grouped = tdp.groupBy("term").agg(
-            F.sort_array(F.collect_list(post)).alias("postings"),
-            F.count("*").cast("long").alias("df"),
-            F.sum("tf").cast("long").alias("cf"),
-        )
-        agg = grouped
-    else:
-        hot_flag = hot.withColumn("_hot", F.lit(True))
-        sharded = (tdp.join(F.broadcast(hot_flag), "term", "left")
-                   .withColumn("_hot", F.col("_hot").isNotNull())
-                   .withColumn(
-                       "shard",
-                       F.when(F.col("_hot"),
-                              F.pmod(F.xxhash64("doc_id"),
-                                     F.lit(shard_factor)))
-                       .otherwise(F.lit(0))))
-        # _hot rides the grouping key (term determines it; groups are
-        # unchanged) so the post-agg hot/cold split is a metadata filter
-        # lifecycle: cleaned by the ContextCleaner when the returned
-        # plan is GC'd; only exists for genuinely skewed corpora (the
-        # empty-hot probe above skips it)
-        g = sharded.groupBy("term", "_hot", "shard").agg(
-            F.sort_array(F.collect_list(post)).alias("postings"),
-            F.count("*").cast("long").alias("p_df"),
-            F.sum("tf").cast("long").alias("p_cf"),
-        ).persist()
-        cold = g.where(~F.col("_hot")).select(
-            "term", F.col("p_df").alias("df"), F.col("p_cf").alias("cf"),
-            "postings")
-        totals = (g.where(F.col("_hot"))
-                  .groupBy("term")
-                  .agg(F.sum("p_df").cast("long").alias("df"),
-                       F.sum("p_cf").cast("long").alias("cf")))
-        hot_rows = (g.where(F.col("_hot"))
-                    .join(F.broadcast(totals), "term")
-                    .select("term", "df", "cf", "postings"))
-        agg = cold.unionByName(hot_rows)
-    return agg.withColumn(
-        "term_bucket", term_bucket_col(F.col("term"), n_buckets)
-    ).select("term", "term_bucket", "df", "cf", "postings")
+    return ib.bucketed_postings(
+        ib.group_postings(tdp, post, hot, sharded=True), n_buckets)
 
 
 def build_positional_index(docs: DataFrame, *, content_col: str = "content",
@@ -212,21 +148,18 @@ def build_positional_index(docs: DataFrame, *, content_col: str = "content",
     the phrase/proximity operators below require it.
 
     ``shard_hot_terms=True`` detects skewed terms from a ~1% document
-    sample and splits their positional postings across rows (see
-    :func:`positional_postings`) — REQUIRED at corpus scale where a
-    stop-word-class term's single merged row would be hundreds of MB;
-    query results are identical either way (tested)."""
+    sample (index_build.hot_terms_from_docs) and splits their
+    positional postings across rows (see :func:`positional_postings`)
+    — REQUIRED at corpus scale where a stop-word-class term's single
+    merged row would be hundreds of MB; query results are identical
+    either way (tested). ``Index.sharded`` is set only when that set is
+    non-empty, so the common build skips the sinks' shard merge."""
     tdp = term_doc_positions_arrow(docs, content_col=content_col,
                                    id_col=id_col, tokenizer=tokenizer,
                                    analyzer=analyzer)
-    hot = None
-    if shard_hot_terms:
-        from inverted_index_and_search_spark.operators.index_build import (
-            hot_terms_from_docs,
-        )
-        hot = hot_terms_from_docs(docs, content_col=content_col,
-                                  id_col=id_col, tokenizer=tokenizer,
-                                  analyzer=analyzer)
+    hot = (ib.probe_hot(ib.hot_terms_from_docs(
+        docs, content_col=content_col, id_col=id_col, tokenizer=tokenizer,
+        analyzer=analyzer)) if shard_hot_terms else None)
     return Index(
         postings=positional_postings(tdp, n_buckets=n_buckets, hot=hot),
         doc_stats=doc_stats(docs, tdp, content_col=content_col, id_col=id_col),

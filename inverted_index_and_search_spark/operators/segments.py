@@ -41,6 +41,7 @@ import json
 import os
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -48,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inverted_index_and_search_spark.kernels import bm25, codec
+from inverted_index_and_search_spark.operators import index_build as ib
 from inverted_index_and_search_spark.operators.index_build import (
     DEFAULT_BUCKETS,
     term_bucket_col,
@@ -62,96 +64,25 @@ SEGMENT_SCHEMA = (
 )
 
 
-def grouped_postings_arrays(
-    tf: DataFrame, *, salt_hot_terms: bool = True, salt_factor: int = 16,
-    hot_df: int = 10_000, hot_sample_mod: int = 100,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """(term, df, cf, doc_ids, tfs, dls) with parallel arrays sorted by
-    doc_id, from a tf kernel's (term, doc_id, tf, dl[, positions]) rows —
-    the encoder's input. Terms the sampled hot-set detector flags
-    (df > hot_df) are SHARDED: their postings stay split across up to
-    ``salt_factor`` rows (pmod(xxhash64(doc_id), s)), each row carrying the TERM-level df/cf (so per-posting BM25 scores computed
-    from any shard row are identical to the unsharded layout's). The
-    giant merged row never exists — no phase-2 shuffle at all — and a
-    hot term becomes multiple SEGMENT rows that the read side merges
-    (fetch_term_postings / the batch kernels), rank/score-identical by
-    construction (tested). The long tail keeps salt 0 and finalizes in
-    the single phase-1 aggregation."""
-    from inverted_index_and_search_spark.operators.index_build import (
-        hot_terms,
-        salt_col,
-    )
-
-    positional = "positions" in tf.columns
-    post = (F.struct("doc_id", "tf", "dl", "positions") if positional
-            else F.struct("doc_id", "tf", "dl"))
-    if salt_hot_terms:
-        if hot is None:
-            hot = hot_terms(tf, hot_df=hot_df, sample_mod=hot_sample_mod)
-        # the hot set is tiny by definition — persist it so the
-        # emptiness probe and the broadcast join don't re-run detection
-        hot = hot.persist()
-        if hot.isEmpty():
-            # nothing hot (the common case): skip the whole salted
-            # machinery, including the phase-1 payload persist below
-            hot.unpersist()
-            salt_hot_terms = False
-    if salt_hot_terms:
-        hot = hot.withColumn("_hot", F.lit(True))
-        salted = (tf.join(F.broadcast(hot), "term", "left")
-                  .withColumn("_hot", F.col("_hot").isNotNull())
-                  .withColumn("salt", salt_col(F.col("_hot"), salt_factor)))
-        partial = salted.groupBy("term", "_hot", "salt").agg(
-            F.sort_array(F.collect_list(post)).alias("pp"),
-            F.count("*").alias("p_df"),
-            F.sum("tf").alias("p_cf"),
-        )
-        # the phase-1 partials persist ONCE (spill-safe local cache) so
-        # the cold branch, the hot payload rows, and the tiny totals
-        # aggregation all read the same materialization. Term-level
-        # df/cf come from a payload-free aggregation of the cached
-        # (term, p_df, p_cf) projection — the columnar cache prunes the
-        # postings column — broadcast-joined back onto the hot shard
-        # rows. Round 3 used a per-term window OVER the payload rows,
-        # which re-exchanged every hot posting array and co-located all
-        # of a hot term's shards in one window task (the straggler
-        # sharding exists to prevent); a totals broadcast WITHOUT the
-        # persist is no better — it re-executes the whole tokenize+tf
-        # pipeline for the broadcast side (measured 2x the build).
-        # Lifecycle: the cache lives while the returned DataFrame does;
-        # the ContextCleaner unpersists it when the plan is GC'd, and
-        # the empty-hot fast path above means it exists only for
-        # genuinely skewed corpora.
-        partial = partial.persist()
-        cold = partial.where(~F.col("_hot")).select(
-            "term", F.col("pp").alias("p"),
-            F.col("p_df").cast("long").alias("df"),
-            F.col("p_cf").cast("long").alias("cf"),
-        )
-        totals = (partial.where(F.col("_hot"))
-                  .groupBy("term")
-                  .agg(F.sum("p_df").cast("long").alias("df"),
-                       F.sum("p_cf").cast("long").alias("cf")))
-        hot_rows = (partial.where(F.col("_hot"))
-                    .join(F.broadcast(totals), "term")
-                    .select("term", F.col("pp").alias("p"), "df", "cf"))
-        agg = cold.unionByName(hot_rows)
-    else:
-        agg = tf.groupBy("term").agg(
-            F.sort_array(F.collect_list(post)).alias("p"),
-            F.count("*").cast("long").alias("df"),
-            F.sum("tf").cast("long").alias("cf"),
-        )
-    cols = [
+def grouped_postings_arrays(tf: DataFrame, *,
+                            hot: DataFrame | None = None) -> DataFrame:
+    """(term, df, cf, doc_ids, tfs, dls[, positions]) with parallel
+    arrays sorted by doc_id, from a tf kernel's (term, doc_id, tf, dl[,
+    positions]) rows — the encoder's input, over the SHARDED finish of
+    :func:`index_build.group_postings`: a term in ``hot`` becomes
+    several segment rows, each carrying the term-level df/cf, which
+    the read side merges (fetch_term_postings / the batch kernels),
+    rank/score-identical to the single-row layout (tested).
+    ``hot=None``: one row per term."""
+    extra = ["positions"] if "positions" in tf.columns else []
+    post = F.struct("doc_id", "tf", "dl", *extra)
+    grouped = ib.group_postings(tf, post, hot, sharded=True)
+    return grouped.select(
         "term", "df", "cf",
-        F.col("p.doc_id").alias("doc_ids"),
-        F.col("p.tf").alias("tfs"),
-        F.col("p.dl").alias("dls"),
-    ]
-    if positional:
-        cols.append(F.col("p.positions").alias("positions"))
-    return agg.select(*cols)
+        F.col("postings.doc_id").alias("doc_ids"),
+        F.col("postings.tf").alias("tfs"),
+        F.col("postings.dl").alias("dls"),
+        *[F.col(f"postings.{c}").alias(c) for c in extra])
 
 
 def _encode_positions(pos_lists) -> bytes:
@@ -252,7 +183,7 @@ class SegmentIndex:
 
 def build_segment_index(
     tf: DataFrame, n_docs: int, avgdl: float,
-    *, n_buckets: int = DEFAULT_BUCKETS, salt_hot_terms: bool = True,
+    *, n_buckets: int = DEFAULT_BUCKETS,
     hot: DataFrame | None = None, tokenizer: str = "standard",
     analyzer=None,
 ) -> SegmentIndex:
@@ -260,18 +191,15 @@ def build_segment_index(
     rows. The term grouping is the one exchange and tf is not persisted:
     a caller that also derives stats from tf persists it itself.
 
-    ``salt_hot_terms``: terms in the ``hot`` set (or detected by the
-    sampled pass) keep their postings SPLIT across shard segment rows
-    — a stop-word-class term at corpus scale would otherwise merge
-    into one multi-GB row. Every shard row carries term-level df/cf,
-    so scores are identical; the read side merges shard cursors
-    (merge_term_postings), rank/score-identical to the single-row
-    layout (tested + driver-verified)."""
+    ``hot``: the terms whose postings stay SPLIT across shard segment
+    rows (:func:`grouped_postings_arrays`) — a stop-word-class term at
+    corpus scale would otherwise merge into one multi-GB row. None
+    shards nothing; builders pass index_build.hot_terms_from_docs (or
+    hot_terms over rows without a docs handle)."""
     if "dl" not in tf.columns:
         raise ValueError("build_segment_index needs the tf kernels' per-row "
                          f"'dl' column; got {tf.columns}")
-    grouped = grouped_postings_arrays(tf, salt_hot_terms=salt_hot_terms,
-                                      hot=hot)
+    grouped = grouped_postings_arrays(tf, hot=hot)
     return SegmentIndex(
         segments=encode_segments(grouped, n_docs, avgdl, n_buckets=n_buckets),
         n_docs=n_docs,
@@ -389,13 +317,12 @@ def decode_segments_tf(idx: SegmentIndex) -> DataFrame:
 
 
 def merge_segment_indexes(parts: list[SegmentIndex], *,
-                          n_buckets: int | None = None,
-                          salt_hot_terms: bool = True,
-                          hot: DataFrame | None = None) -> SegmentIndex:
+                          n_buckets: int | None = None) -> SegmentIndex:
     """One segment index from several built over DISJOINT doc-id spaces
     — the SPIMI/LSM merge at the compressed layer: each part's postings
     decode back to flat tf rows (distributed, no re-tokenize), union,
-    and re-encode through the normal build. n_docs adds; avgdl is the
+    and re-encode through the normal build, sharding the terms of
+    :func:`_parts_hot_terms`. n_docs adds; avgdl is the
     doc-count-weighted mean (recovers the global mean because parts
     partition the corpus). All parts must share positional-ness;
     callers guarantee doc-id disjointness (overlaps would double-count
@@ -406,8 +333,6 @@ def merge_segment_indexes(parts: list[SegmentIndex], *,
     if len(pos_flags) > 1:
         raise ValueError("cannot merge positional with non-positional "
                          "segment indexes")
-    from functools import reduce
-
     tf = reduce(lambda a, b: a.unionByName(b),
                 (decode_segments_tf(p) for p in parts))
     n_docs = sum(p.n_docs for p in parts)
@@ -423,8 +348,20 @@ def merge_segment_indexes(parts: list[SegmentIndex], *,
     return build_segment_index(
         tf, n_docs, avgdl,
         n_buckets=n_buckets if n_buckets is not None else parts[0].n_buckets,
-        salt_hot_terms=salt_hot_terms, hot=hot, tokenizer=parts[0].tokenizer,
+        hot=_parts_hot_terms(parts), tokenizer=parts[0].tokenizer,
         analyzer=parts[0].analyzer)
+
+
+def _parts_hot_terms(parts: list[SegmentIndex]) -> DataFrame:
+    """(term) whose df summed over ``parts`` exceeds index_build.HOT_DF
+    — exact, from the narrow (term, df) columns: df is term-level on
+    every shard row, so each part contributes one value per term, and
+    no payload is decoded."""
+    dfs = reduce(lambda a, b: a.unionByName(b), (
+        p.segments.groupBy("term").agg(F.max("df").alias("df"))
+        for p in parts))
+    return (dfs.groupBy("term").agg(F.sum("df").alias("df"))
+            .where(F.col("df") > ib.HOT_DF).select("term"))
 
 
 def _decode_row(row, avgdl: float, n_docs: int, block: int) -> bm25.TermPostings:

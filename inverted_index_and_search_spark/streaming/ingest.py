@@ -132,7 +132,8 @@ class StreamingIndexWriter(DeltaLog):
         tf = live.tf.join(live.doc_stats.select("doc_id", "dl"), "doc_id")
         sidx = sg.build_segment_index(
             tf, n_docs, avgdl, n_buckets=self.n_buckets,
-            tokenizer=self.tokenizer, analyzer=self.analyzer)
+            hot=ib.hot_terms(tf), tokenizer=self.tokenizer,
+            analyzer=self.analyzer)
         sg.write_segment_index(sidx, seg_dir)
 
 

@@ -272,12 +272,12 @@ def test_cli_grep_lines_and_count(spark, tmp_path, capsys):
 
 @pytest.fixture(scope="module")
 def ctidx(docs_df):
-    # hot_df=0 with the default sampler finds ~every gram hot on the
-    # tiny fixture — force a mixed layout instead: two known-hot grams
-    # sharded, the rest single-row
+    # a zero threshold would flag ~every gram hot on the tiny fixture —
+    # force a mixed layout instead: two known-hot grams sharded, the
+    # rest single-row
     hot = docs_df.sparkSession.createDataFrame(
         [("def",), ("ret",)], "gram string")
-    return grep.build_trigram_segments(docs_df, hot=hot, shard_factor=4)
+    return grep.build_trigram_segments(docs_df, hot=hot)
 
 
 def test_compressed_equals_flat(spark, docs_df, corpus_pdf, tidx, ctidx):
@@ -302,8 +302,7 @@ def test_compressed_hot_gram_sharded(spark, ctidx):
     comp = grep.build_trigram_segments(
         spark.createDataFrame(
             [(0, "xdefy def"), (1, "def")], "doc_id long, content string"),
-        hot=spark.createDataFrame([("def",)], "gram string"),
-        shard_factor=4)
+        hot=spark.createDataFrame([("def",)], "gram string"))
     want = sorted((r["gram"], r["doc_id"]) for r in flat.grams
                   .select("gram", "doc_id").collect())
     got = sorted((r["gram"], r["doc_id"]) for r in

@@ -77,15 +77,18 @@ def test_salted_path_identical(docs_df, index):
     assert sorted(a, key=key) == sorted(b, key=key)
 
 
-def test_salted_path_identical_with_forced_hot_set(docs_df, index):
-    """Drive the actual hot-term branch: hot_df=0 + sample_mod=1 makes
-    every term 'hot' (all rows salted), the opposite extreme of the
-    default threshold where nothing at test scale is hot — output must
-    be byte-identical either way."""
+def test_salted_path_identical_with_forced_hot_set(docs_df, index,
+                                                   monkeypatch):
+    """Drive the actual hot-term branch: HOT_DF=0 + HOT_SAMPLE_MOD=1
+    makes the detector flag every term 'hot' (all rows salted), the
+    opposite extreme of the default threshold where nothing at test
+    scale is hot — output must be byte-identical either way."""
+    monkeypatch.setattr(ib, "HOT_DF", 0)
+    monkeypatch.setattr(ib, "HOT_SAMPLE_MOD", 1)
     tf = ib.term_doc_tf_arrow(docs_df)
-    hot = ib.hot_terms(tf, hot_df=0, sample_mod=1)
+    hot = ib.hot_terms(tf)
     assert hot.count() == index.postings.count()  # every term flagged
-    forced = ib.postings(tf, salt_hot_terms=True, hot_df=0, hot_sample_mod=1)
+    forced = ib.postings(tf, hot=hot)
     a = index.postings.select("term", "df", "cf", "postings").collect()
     b = forced.select("term", "df", "cf", "postings").collect()
     key = lambda r: r["term"]  # noqa: E731
@@ -99,7 +102,7 @@ def test_salted_path_identical_with_mixed_hot_set(spark, docs_df, index):
     tf = ib.term_doc_tf_arrow(docs_df)
     hot = spark.createDataFrame(
         [("def",), ("return",), ("zzznothere",)], "term string")
-    mixed = ib.postings(tf, salt_hot_terms=True, hot=hot)
+    mixed = ib.postings(tf, hot=hot)
     a = index.postings.select("term", "df", "cf", "postings").collect()
     b = mixed.select("term", "df", "cf", "postings").collect()
     key = lambda r: r["term"]  # noqa: E731
@@ -113,7 +116,7 @@ def test_salted_phase2_merges_hot_terms_only(spark, docs_df):
     re-shuffled the ENTIRE postings payload through phase 2."""
     tf = ib.term_doc_tf_arrow(docs_df)
     hot = spark.createDataFrame([("def",)], "term string")
-    plan = (ib.postings(tf, salt_hot_terms=True, hot=hot)
+    plan = (ib.postings(tf, hot=hot)
             ._jdf.queryExecution().optimizedPlan().toString())
     assert plan.count("flatten") == 1, plan
     assert "Union" in plan, plan

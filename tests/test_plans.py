@@ -367,6 +367,35 @@ def test_sharded_segments_build_has_no_payload_window(spark):
         assert n_nodes(hot_plan, "Exchange") == 1, hot_plan
 
 
+def test_merge_hot_set_reads_df_not_payload(spark, tmp_path, monkeypatch):
+    """merge_segment_indexes derives its hot set from the parts' narrow
+    (term, df) columns: no payload decode (no MapInPandas over the
+    persisted parts), and exact — df summed over parts, one value per
+    term per part even where a part holds a term's shard rows."""
+    from pyspark.sql import functions as F
+
+    from inverted_index_and_search_spark.operators import segments as seg
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    parts = []
+    for par in (0, 1):
+        half = docs.where(F.pmod("doc_id", F.lit(2)) == par)
+        tf = ib.term_doc_tf_arrow(half, content_col="text", id_col="doc_id")
+        # part 0 shards every term, so its terms repeat across rows
+        hot = tf.select("term").distinct() if par == 0 else None
+        out = str(tmp_path / f"part{par}")
+        seg.write_segment_index(seg.build_segment_index(tf, 250, 10.0,
+                                                        hot=hot), out)
+        parts.append(seg.read_segment_index(spark, out))
+    monkeypatch.setattr(ib, "HOT_DF", 5)
+    got = seg._parts_hot_terms(parts)
+    assert n_nodes(explain(got), "MapInPandas") == 0
+    whole = ib.term_doc_tf_arrow(docs, content_col="text", id_col="doc_id")
+    want = {r["term"] for r in
+            whole.groupBy("term").count().where("count > 5").collect()}
+    assert {r["term"] for r in got.collect()} == want
+
+
 @pytest.mark.parametrize("kernel,tokenizer,hash_exchanges", [
     ("tf", "standard", 1), ("positions", "standard", 1), ("tf", "code", 2)])
 def test_segment_build_has_no_dl_exchange(spark, kernel, tokenizer,

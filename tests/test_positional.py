@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from inverted_index_and_search_spark.operators import positional as pos
 from inverted_index_and_search_spark.operators import query as q
 from inverted_index_and_search_spark.tokenizer import tokenize_py
+from tests.conftest import TESTDATA
 
 PHRASES = [
     ["def"],                      # single-term phrase == term match
@@ -213,13 +214,13 @@ def test_sharded_positional_results_identical(spark, docs_df, oracle_idx,
                                               corpus_pdf):
     """Hot-term posting-list sharding changes the ROW layout only:
     boolean/BM25/phrase results are identical to the unsharded build.
-    Forces EVERY term hot (hot_df=0 via an all-terms hot set)."""
+    Forces EVERY term hot (an all-terms hot set)."""
     from pyspark.sql import functions as F
 
     all_terms = (pos.term_doc_positions(docs_df)
                  .select("term").distinct())
     tdp = pos.term_doc_positions(docs_df)
-    sharded = pos.positional_postings(tdp, hot=all_terms, shard_factor=8)
+    sharded = pos.positional_postings(tdp, hot=all_terms)
     base = pos.build_positional_index(docs_df)
     from inverted_index_and_search_spark.operators.index_build import (
         Index,
@@ -265,22 +266,39 @@ def test_same_term_window_needs_two_occurrences(spark):
     assert got == [0, 2]  # doc 1 has one 'x' only -> no self-match
 
 
-def test_sharded_index_text_sink_one_line_per_term(spark, docs_df):
-    from inverted_index_and_search_spark.operators.index_build import (
-        Index,
-        doc_stats,
-        postings_text_lines,
-    )
+def test_sharded_index_text_sink_one_line_per_term(spark, docs_df,
+                                                   monkeypatch):
+    from inverted_index_and_search_spark.operators import index_build as ib
 
-    tdp = pos.term_doc_positions(docs_df)
-    all_terms = tdp.select("term").distinct()
-    sharded = Index(
-        postings=pos.positional_postings(tdp, hot=all_terms, shard_factor=8),
-        doc_stats=doc_stats(docs_df, tdp), tf=tdp, sharded=True)
     base = pos.build_positional_index(docs_df)
-    lines_s = sorted(r["value"] for r in postings_text_lines(sharded).collect())
-    lines_b = sorted(r["value"] for r in postings_text_lines(base).collect())
+    # a zero threshold over the full sample flags every term hot
+    monkeypatch.setattr(ib, "HOT_DF", 0)
+    monkeypatch.setattr(ib, "HOT_SAMPLE_MOD", 1)
+    sharded = pos.build_positional_index(docs_df, shard_hot_terms=True)
+    assert sharded.sharded is True
+    lines_s = sorted(r["value"]
+                     for r in ib.postings_text_lines(sharded).collect())
+    lines_b = sorted(r["value"]
+                     for r in ib.postings_text_lines(base).collect())
     assert lines_s == lines_b
     # one line per term even when every term is sharded
     terms = [ln.split("\t")[0] for ln in lines_s]
     assert len(terms) == len(set(terms))
+
+
+def test_positional_build_unsharded_when_nothing_hot(spark, tmp_path):
+    """Index.sharded reports the probed hot set: default detection on
+    sf0.001 finds nothing hot, so the build and its meta.json say
+    unsharded and the sinks skip the shard merge."""
+    import json
+
+    from inverted_index_and_search_spark.operators import index_build as ib
+
+    docs = spark.read.parquet(f"{TESTDATA}/documents.parquet")
+    idx = pos.build_positional_index(docs, content_col="text",
+                                     shard_hot_terms=True)
+    assert idx.sharded is False
+    out = str(tmp_path / "pidx")
+    ib.write_index(idx, out)
+    with open(f"{out}/meta.json") as f:
+        assert json.load(f)["sharded"] is False

@@ -92,7 +92,7 @@ def test_query_server_phrase(psegs, pidx):
 def test_non_positional_segments_reject_phrase(spark, docs_df):
     tf = ib.term_doc_tf_arrow(docs_df)
     n_docs = docs_df.count()
-    sidx = seg.build_segment_index(tf, n_docs, 100.0, salt_hot_terms=False)
+    sidx = seg.build_segment_index(tf, n_docs, 100.0)
     with pytest.raises(ValueError, match="positional"):
         seg.phrase_docs(sidx, ["def", "trait"])
 
@@ -162,7 +162,7 @@ def test_query_server_near_terms(psegs, pidx):
 def test_near_docs_requires_positional(spark, docs_df):
     tf = ib.term_doc_tf_arrow(docs_df)
     n = docs_df.count()
-    sidx = seg.build_segment_index(tf, n, 10.0, salt_hot_terms=False)
+    sidx = seg.build_segment_index(tf, n, 10.0)
     with pytest.raises(ValueError):
         seg.near_docs(sidx, "def", "return", 3)
 
@@ -183,6 +183,7 @@ def test_positional_merge_preserves_phrases(spark, docs_df, psegs):
             .agg(F.avg("dl")).collect()[0][0] or 0.0)
         halves.append(seg.build_segment_index(tdp, nd, ad))
     merged = seg.merge_segment_indexes(halves)
+    merged.segments.cache()  # queried 8 times: decode and encode once
     for phrase in PHRASES[:4]:
         assert seg.phrase_docs(merged, phrase) == seg.phrase_docs(
             psegs, phrase), phrase
@@ -244,8 +245,7 @@ def test_query_server_expr_phrase_needs_positions(spark, docs_df):
     from inverted_index_and_search_spark.operators.search_expr import ExprError
 
     tf = ib.term_doc_tf_arrow(docs_df)
-    sidx = seg.build_segment_index(tf, docs_df.count(), 10.0,
-                                   salt_hot_terms=False)
+    sidx = seg.build_segment_index(tf, docs_df.count(), 10.0)
     server = seg.QueryServer(sidx)
     for expr in ['"def return"', "def NEAR/2 return"]:
         with pytest.raises(ExprError):
@@ -262,6 +262,7 @@ def test_sharded_positional_segments_phrase_identical(spark, docs_df,
     all_terms = tdp.select("term").distinct()
     sh = seg.build_segment_index(tdp, psegs.n_docs, psegs.avgdl,
                                  hot=all_terms)
+    sh.segments.cache()  # queried 12 times: build once
     from pyspark.sql import functions as F
     mx = (sh.segments.groupBy("term").count()
           .agg(F.max("count")).collect()[0][0])

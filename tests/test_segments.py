@@ -216,6 +216,7 @@ def test_merge_segment_indexes_equals_whole_build(spark, docs_df,
     tok = ib.tokens(docs_df)
     tf = ib.term_doc_tf(tok)
     whole = seg.build_segment_index(tf, oracle_idx.n_docs, oracle_idx.avgdl)
+    whole.segments.cache()  # queried 6 times: build once
 
     import pandas as pd
 
@@ -231,6 +232,7 @@ def test_merge_segment_indexes_equals_whole_build(spark, docs_df,
         ad = float(dls.agg(F.avg("dl")).collect()[0][0] or 0.0)
         halves.append(seg.build_segment_index(ptf, nd, ad))
     merged = seg.merge_segment_indexes(halves)
+    merged.segments.cache()
     assert merged.n_docs == whole.n_docs
     assert merged.avgdl == pytest.approx(whole.avgdl, rel=1e-12)
 

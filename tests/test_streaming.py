@@ -197,6 +197,7 @@ def test_compact_segments_equals_batch_segment_build(spark, docs_df,
     avgdl = float(tdp.groupBy("doc_id").agg(ib.F.sum("tf").alias("dl"))
                   .agg(ib.F.avg("dl")).collect()[0][0])
     batch = sg.build_segment_index(tdp, n, avgdl)
+    batch.segments.cache()  # queried 4 times: build once
 
     a = {(r["term"], r["doc_id"], r["tf"])
          for r in sg.decode_segments_tf(streamed).collect()}
@@ -319,6 +320,7 @@ def test_delete_docs_tombstones(spark, docs_df, tmp_path):
     streamed = sg.read_segment_index(spark, seg_dir)
     n, avgdl = batch4.collection_stats()
     want_seg = sg.build_segment_index(ib.term_doc_tf_arrow(expect4), n, avgdl)
+    want_seg.segments.cache()
     assert streamed.n_docs == n
     assert {tuple(r) for r in sg.decode_segments_tf(streamed).collect()} \
         == {tuple(r) for r in sg.decode_segments_tf(want_seg).collect()}
